@@ -15,19 +15,24 @@ The reference idioms and their equivalents here:
 
 Everything returns DataFrames (lazy plans over the `specfile`
 DataSource) except the O(1) per-scan metadata lookup, which collects
-one row.  `sf[n]` filters on `scan_number`, which the DataSource pushes
-down to partition pruning — the distributed equivalent of the
+one row.  `sf[n]` reads with the DataSource's `scans` option, which
+prunes to that scan's partitions — the distributed equivalent of the
 reference's byte-offset seek.
+
+A handle is a snapshot of its files' scan index, as in pyspec: it
+memoizes one loaded frame per (table, scans) and one SpecScanFrame per
+scan selection.  Each frame indexes the files the first time it runs,
+and Spark reuses that planned read for every later query over it, so
+repeating `sf[n].wide()` makes no Python planner call.  Scans appended
+after that are seen through `sf.reload()`.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspec_spark.sources.spec_datasource import SpecDataSource
+from pyspec_spark.sources.spec_datasource import read_spec
 
 
 class SpecScanFrame:
@@ -40,19 +45,17 @@ class SpecScanFrame:
     def __init__(self, parent: "SpecDataFile", scan_numbers: list[int]):
         self._parent = parent
         self.scan_numbers = list(scan_numbers)
-        cond = F.col("scan_number").isin(self.scan_numbers)
-        self.df = parent.points().where(cond)
+
+    @property
+    def df(self) -> DataFrame:
+        return self._parent._read("points", self.scan_numbers)
 
     # -- metadata ----------------------------------------------------------
     def meta(self) -> dict:
         """Per-scan header metadata (motors, UB, wavelength, command...).
         O(scans-requested) collect of the scans table — the analog of
         pyspec's parsed header attributes."""
-        rows = (
-            self._parent.scans()
-            .where(F.col("scan_number").isin(self.scan_numbers))
-            .collect()
-        )
+        rows = self._parent._read("scans", self.scan_numbers).collect()
         if not rows:
             raise KeyError(f"scan(s) {self.scan_numbers} not found")
         if len(self.scan_numbers) == 1 and len(rows) == 1:
@@ -69,8 +72,7 @@ class SpecScanFrame:
         if cached is not None:
             return cached
         metas = (
-            self._parent.scans()
-            .where(F.col("scan_number").isin(self.scan_numbers))
+            self._parent._read("scans", self.scan_numbers)
             .select("columns")
             .collect()
         )
@@ -181,31 +183,19 @@ class SpecDataFile:
     """Open one or more SPEC files through the `specfile` DataSource.
 
     `path` accepts a file, a directory, a glob, or a comma-separated
-    list (the DataSource's path option).  Registration is idempotent
-    per session."""
-
-    _registered: set[str] = set()
+    list (the DataSource's path option)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        app = spark.sparkContext.applicationId
-        if app not in SpecDataFile._registered:
-            spark.dataSource.register(SpecDataSource)
-            SpecDataFile._registered.add(app)
+        self._frames: dict[tuple, DataFrame] = {}
+        self._scan_frames: dict[tuple, SpecScanFrame] = {}
 
-    def _read(self, table: str) -> DataFrame:
-        from pyspec_spark.sources.spec_datasource import pushdown_enabled
-
-        # conf sniffed driver-side: serve the pushFilters reader only
-        # when the session allows it (see spec_datasource.read_spec)
-        return (
-            self.spark.read.format("specfile")
-            .option("path", self.path)
-            .option("table", table)
-            .option("pushdown", "true" if pushdown_enabled(self.spark) else "false")
-            .load()
-        )
+    def _read(self, table: str, scans: list[int] | None = None) -> DataFrame:
+        key = (table, None if scans is None else tuple(sorted(set(scans))))
+        if key not in self._frames:
+            self._frames[key] = read_spec(self.spark, self.path, table, scans)
+        return self._frames[key]
 
     def points(self) -> DataFrame:
         return self._read("points")
@@ -214,12 +204,14 @@ class SpecDataFile:
         return self._read("scans")
 
     def reload(self) -> "SpecDataFile":
-        """Re-index appended files (pyspec `reload`): plans built after
-        this call see the new offsets.  Streaming ingestion of the same
-        append pattern lives in `streaming/events.py`."""
+        """Re-index appended files (pyspec `reload`): this handle keeps
+        its snapshot; the returned handle plans fresh reads that see the
+        new scans.  Streaming ingestion of the same append pattern lives
+        in `streaming/spec.py`."""
         return SpecDataFile(self.spark, self.path)
 
     def __getitem__(self, n: int | list[int]) -> SpecScanFrame:
-        if isinstance(n, int):
-            return SpecScanFrame(self, [n])
-        return SpecScanFrame(self, list(n))
+        key = (n,) if isinstance(n, int) else tuple(n)
+        if key not in self._scan_frames:
+            self._scan_frames[key] = SpecScanFrame(self, list(key))
+        return self._scan_frames[key]

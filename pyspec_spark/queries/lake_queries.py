@@ -150,11 +150,9 @@ def q_spec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(tmp, "roundtrip.spec")
     with open(path, "w") as f:
         f.write("\n".join(lines))
-    # read_spec sniffs spark.sql.python.filterPushdown.enabled in THIS
-    # session and only serves the pushFilters-bearing reader when true —
-    # the r8 driver session had it false and hard-crashed the old direct
-    # format read (CORRECTNESS_r08 q_spec_roundtrip DATA_SOURCE_PUSHDOWN_
-    # DISABLED); correctness must not depend on the conf.
+    # The specfile reader prunes by its `scans` option and accepts no
+    # pushed filters, so this read works whatever the session's Python
+    # filter-pushdown conf (a filter-accepting reader fails when it is off).
     pts = read_spec(spark, path)
     return pts.select(
         F.col("values")["doc_id"].alias("doc_id_v"),

@@ -4,14 +4,15 @@ S1/S2, §4.3 item 1.
 The reference's only optimization is its scan index: `pyspec/spec.py`
 `SpecDataFile.index()` records each scan's byte offset so `sf[n]` parses
 one block.  Distributed translation: **one input partition per scan
-block** and `scan_number` filter pushdown, so a scan-number predicate
-becomes partition pruning — the exact same byte-skipping, executor-side.
+block**, and a `scans` read option that keeps only the listed scan
+numbers' partitions — the same byte-skipping, executor-side.
 
 Usage:
     spark.dataSource.register(SpecDataSource)
     pts   = spark.read.format("specfile").option("path", f).load()
     scans = (spark.read.format("specfile").option("path", f)
                   .option("table", "scans").load())
+    two   = read_spec(spark, f, scans=[3, 4])   # prunes to 2 blocks/file
 
 Two logical tables (FIXTURES.md B1 schemas):
   points: file, scan_number, point_index, values MAP<STRING,DOUBLE>,
@@ -21,12 +22,20 @@ Two logical tables (FIXTURES.md B1 schemas):
           motors MAP<STRING,DOUBLE>, columns ARRAY<STRING>,
           n_points_declared INT, aborted BOOLEAN
 
+Pruning is by option, never by filter pushdown: Spark caches a loaded
+frame's planned read and reuses it for every query over that frame, so a
+reader whose partitions depended on the pushed predicates of the first
+query would answer later queries from the wrong blocks.  Partitions here
+are a pure function of the options.  A `scan_number` predicate on an
+unpruned frame is still correct; it filters rows after a full parse.
+
 Scale notes: the driver-side index pass reads only `#S` line offsets
-(regex scan, no block parse).  Each executor task re-reads just its
-[start, end) byte range.  At 100 TB (many files x many scans) the
-partition list is file-metadata-sized, and pruning keeps point queries
-O(one block).  Appended files (pyspec `reload`) are handled by re-running
-load() — offsets are recomputed, matching the reference's manual re-poll.
+(regex scan over bytes, no block parse).  Each executor task reads just
+the file header and its own [start, end) byte range.  At 100 TB (many
+files x many scans) the partition list is file-metadata-sized, and
+pruning keeps point queries O(one block).  A planned read is a snapshot
+of the scan index: appended scans (pyspec `reload`) are seen by a new
+load().
 """
 
 from __future__ import annotations
@@ -84,9 +93,11 @@ SCANS_SCHEMA = StructType(
 
 
 class _ScanPartition(InputPartition):
-    def __init__(self, path: str, scan_number: int, start: int, end: int):
+    """One scan block: byte offsets of the header end and the block."""
+
+    def __init__(self, path: str, header_end: int, start: int, end: int):
         self.path = path
-        self.scan_number = scan_number
+        self.header_end = header_end
         self.start = start
         self.end = end
 
@@ -105,19 +116,14 @@ def _resolve_paths(path_opt: str) -> list[str]:
 
 
 def _scan_rows(
-    table: str, path: str, text: str, start: int, end: int
+    table: str, path: str, motor_names: list[str], block: str
 ) -> Iterator[tuple]:
-    """Parse one scan block of an already-read SPEC file into rows of
-    the requested logical table (shared by the batch partition reader
-    and the streaming tail reader)."""
-    from pyspec_spark.sources.spec_format import (
-        parse_file_header,
-        parse_scan_block,
-    )
+    """Parse one scan block's text into rows of the requested logical
+    table (shared by the batch partition reader and the streaming tail
+    reader)."""
+    from pyspec_spark.sources.spec_format import parse_scan_block
 
-    header = parse_file_header(text)
-    block = text[start:end]
-    scan = parse_scan_block(block, header.motor_names)
+    scan = parse_scan_block(block, motor_names)
     fname = os.path.basename(path)
 
     if table == "scans":
@@ -152,116 +158,58 @@ def _scan_rows(
 
 
 class SpecDataSourceReader(DataSourceReader):
-    """Base reader — deliberately does NOT define ``pushFilters``.
+    """Batch reader: one partition per scan block, pruned by the optional
+    ``scans`` option (comma-separated scan numbers).
 
-    Spark 4.1's planning worker hard-fails any reader that overrides
-    ``pushFilters`` when ``spark.sql.python.filterPushdown.enabled`` is
-    false (plan_data_source_read.py DATA_SOURCE_PUSHDOWN_DISABLED), and
-    the worker cannot see session confs from ``reader()``.  So pushdown
-    lives in the :class:`SpecPushdownReader` subclass, selected by the
-    driver-side ``pushdown`` read option (see ``read_spec`` /
-    ``SpecDataSource.reader``): pushdown is an optimization; correctness
-    must never depend on the conf being enabled (round-8 driver red)."""
+    The partition list depends on the options and the file bytes only,
+    so Spark may reuse one planned read for every query over a loaded
+    frame.  Offsets are bytes; every boundary falls just after a newline
+    or at the header's final newline, so decoding the header and one
+    block separately yields the same text as decoding the whole file."""
 
     def __init__(self, options: dict, table: str):
-        self.options = options
         self.table = table
         self.path = options.get("path")
         if not self.path:
             raise ValueError("specfile source requires .option('path', ...)")
-        self._scan_filter: set[int] | None = None  # None = no pruning
-        self._min_scan: int | None = None
-        self._max_scan: int | None = None
-
-    def _keep(self, scan_number: int) -> bool:
-        if self._scan_filter is not None and scan_number not in self._scan_filter:
-            return False
-        if self._min_scan is not None and scan_number < self._min_scan:
-            return False
-        if self._max_scan is not None and scan_number > self._max_scan:
-            return False
-        return True
+        scans = options.get("scans")
+        self._scan_filter: set[int] | None = (
+            None if scans is None else {int(s) for s in scans.split(",") if s.strip()}
+        )
 
     # -- partition planning: the scan index, one partition per block -------
     def partitions(self):
-        from pyspec_spark.sources.spec_format import index_scans
+        from pyspec_spark.sources.spec_format import header_end, index_scans
 
         parts: list[_ScanPartition] = []
         for path in _resolve_paths(self.path):
-            with open(path, encoding="utf-8", errors="replace") as fh:
-                text = fh.read()
-            for scan_number, start, end in index_scans(text):
-                if self._keep(scan_number):
-                    parts.append(_ScanPartition(path, scan_number, start, end))
+            with open(path, "rb") as fh:
+                data = fh.read()
+            head = header_end(data)
+            for scan_number, start, end in index_scans(data):
+                if self._scan_filter is None or scan_number in self._scan_filter:
+                    parts.append(_ScanPartition(path, head, start, end))
         if not parts:
-            # full pruning (predicate matches no scan): Spark calls
-            # read(None) when the partition list is empty, so return one
-            # sentinel partition that yields nothing instead
-            return [_ScanPartition("", -1, 0, 0)]
+            # full pruning (no listed scan exists): Spark calls read(None)
+            # when the partition list is empty, so return one sentinel
+            # partition that yields nothing instead
+            return [_ScanPartition("", 0, 0, 0)]
         return parts
 
-    # -- per-partition read: parse ONE scan block ---------------------------
+    # -- per-partition read: the header and ONE scan block ------------------
     def read(self, partition: _ScanPartition) -> Iterator[tuple]:
+        from pyspec_spark.sources.spec_format import parse_file_header
+
         if partition is None or not partition.path:  # pruned-empty sentinel
             return
-        with open(partition.path, encoding="utf-8", errors="replace") as fh:
-            text = fh.read()
+        with open(partition.path, "rb") as fh:
+            head = fh.read(partition.header_end)
+            fh.seek(partition.start)
+            block = fh.read(partition.end - partition.start)
+        motor_names = parse_file_header(head.decode("utf-8", "replace")).motor_names
         yield from _scan_rows(
-            self.table, partition.path, text, partition.start, partition.end
+            self.table, partition.path, motor_names, block.decode("utf-8", "replace")
         )
-
-
-class SpecPushdownReader(SpecDataSourceReader):
-    """Pushdown-capable reader (Spark 4.1 Python DataSource filter API).
-
-    Served by ``SpecDataSource.reader()`` only when the read carries
-    ``.option("pushdown", "true")`` — which driver-side helpers set iff
-    ``spark.sql.python.filterPushdown.enabled`` is actually true in the
-    live session (the conf is read where it CAN be read).  scan_number
-    predicates become partition pruning: the distributed twin of the
-    SPEC byte-offset scan index."""
-
-    def pushFilters(self, filters):  # noqa: N802  (API name)
-        try:
-            from pyspark.sql.datasource import (
-                EqualTo,
-                GreaterThan,
-                GreaterThanOrEqual,
-                In,
-                LessThan,
-                LessThanOrEqual,
-            )
-        except ImportError:  # pragma: no cover - older API
-            yield from filters
-            return
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            col = attr[0] if attr else None
-            if col != "scan_number":
-                yield f
-                continue
-            if isinstance(f, EqualTo):
-                s = {f.value}
-                self._scan_filter = s if self._scan_filter is None else (self._scan_filter & s)
-            elif isinstance(f, In):
-                s = set(f.value)  # In.value is the tuple of list members
-                self._scan_filter = s if self._scan_filter is None else (self._scan_filter & s)
-            elif isinstance(f, GreaterThan):
-                self._min_scan = max(self._min_scan or f.value + 1, f.value + 1)
-            elif isinstance(f, GreaterThanOrEqual):
-                self._min_scan = max(self._min_scan or f.value, f.value)
-            elif isinstance(f, LessThan):
-                self._max_scan = min(
-                    self._max_scan if self._max_scan is not None else f.value - 1,
-                    f.value - 1,
-                )
-            elif isinstance(f, LessThanOrEqual):
-                self._max_scan = min(
-                    self._max_scan if self._max_scan is not None else f.value, f.value
-                )
-            else:
-                yield f
-
 
 
 class SpecSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -310,7 +258,7 @@ class SpecSimpleStreamReader(SimpleDataSourceStreamReader):
 
     def _poll(self, start: dict):
         """Index every resolved file; return (rows, next_offset)."""
-        from pyspec_spark.sources.spec_format import index_scans
+        from pyspec_spark.sources.spec_format import index_scans, parse_file_header
 
         prev = start.get("files", {})
         # carry forward state for files a transient glob/NFS hiccup hid
@@ -357,8 +305,9 @@ class SpecSimpleStreamReader(SimpleDataSourceStreamReader):
             # trailing scan: only when the file is quiescent
             if size == st["size"] and idx:
                 upto = len(idx)
+            motor_names = parse_file_header(text).motor_names
             for scan_number, s, e in idx[emitted:upto]:
-                rows.extend(_scan_rows(self.table, path, text, s, e))
+                rows.extend(_scan_rows(self.table, path, motor_names, text[s:e]))
             tail_end = idx[upto - 1][2] if upto else 0
             nxt[path] = {"size": size, "emitted": upto, "tail_end": tail_end}
         return rows, {"files": nxt}
@@ -373,7 +322,7 @@ class SpecSimpleStreamReader(SimpleDataSourceStreamReader):
         the final block to the byte extent recorded at emission time
         (``tail_end``) so a file that has since grown replays the
         originally-emitted bytes, not the longer present-day scan."""
-        from pyspec_spark.sources.spec_format import index_scans
+        from pyspec_spark.sources.spec_format import index_scans, parse_file_header
 
         s_files = start.get("files", {})
         for path, e_st in end.get("files", {}).items():
@@ -384,11 +333,12 @@ class SpecSimpleStreamReader(SimpleDataSourceStreamReader):
             with open(path, encoding="utf-8", errors="replace") as fh:
                 text = fh.read()
             idx = index_scans(text)
+            motor_names = parse_file_header(text).motor_names
             tail_end = e_st.get("tail_end")
             for i, (scan_number, s, e) in enumerate(idx[lo:hi], start=lo):
                 if i == hi - 1 and tail_end is not None:
                     e = min(e, tail_end)
-                yield from _scan_rows(self.table, path, text, s, e)
+                yield from _scan_rows(self.table, path, motor_names, text[s:e])
 
 
 class SpecDataSource(DataSource):
@@ -405,19 +355,7 @@ class SpecDataSource(DataSource):
         return SCANS_SCHEMA if table == "scans" else POINTS_SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
-        # The pushdown-capable subclass is served ONLY on explicit
-        # opt-in: Spark's planning worker rejects a pushFilters-bearing
-        # reader whenever spark.sql.python.filterPushdown.enabled is
-        # false, and this method cannot see session confs — so the
-        # driver-side read path must sniff the conf and pass the result
-        # as an option (read_spec does).  Default = base reader:
-        # correct under ANY session configuration.
-        cls = (
-            SpecPushdownReader
-            if str(self.options.get("pushdown", "")).lower() in ("true", "1")
-            else SpecDataSourceReader
-        )
-        return cls(self.options, self.options.get("table", "points"))
+        return SpecDataSourceReader(self.options, self.options.get("table", "points"))
 
     def simpleStreamReader(self, schema):  # noqa: N802 (API name)
         return SpecSimpleStreamReader(
@@ -426,45 +364,14 @@ class SpecDataSource(DataSource):
 
 
 def register(spark) -> None:
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:  # pragma: no cover — static conf on some builds
-        pass
     spark.dataSource.register(SpecDataSource)
 
 
-def pushdown_enabled(spark) -> bool:
-    """True iff the LIVE session allows Python-DataSource pushdown.
-
-    Read driver-side (where session confs are visible) and forwarded to
-    ``SpecDataSource.reader()`` as the ``pushdown`` option — the only
-    channel the planning worker can see."""
-    try:
-        return (
-            str(
-                spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-            ).lower()
-            == "true"
-        )
-    except Exception:  # pragma: no cover — conf API unavailable
-        return False
-
-
-def read_spec(spark, path: str, table: str = "points"):
-    """The safe front door for specfile reads: registers the source,
-    best-effort enables pushdown, and serves a pushFilters-bearing
-    reader ONLY when the session conf actually came up true — so the
-    read succeeds (without pruning) on sessions where the conf is
-    false/static instead of dying with DATA_SOURCE_PUSHDOWN_DISABLED
-    (the round-8 driver red, CORRECTNESS_r08 q_spec_roundtrip)."""
-    try:
-        register(spark)
-    except Exception:
-        pass  # already registered in this session
-    return (
-        spark.read.format("specfile")
-        .option("path", path)
-        .option("table", table)
-        .option("pushdown", "true" if pushdown_enabled(spark) else "false")
-        .load()
-    )
+def read_spec(spark, path: str, table: str = "points", scans=None):
+    """The front door for specfile reads: registers the source and, when
+    ``scans`` lists scan numbers, plans only those scans' blocks."""
+    register(spark)
+    r = spark.read.format("specfile").option("path", path).option("table", table)
+    if scans is not None:
+        r = r.option("scans", ",".join(str(n) for n in sorted(set(scans))))
+    return r.load()

@@ -84,29 +84,34 @@ class Scan:
     mca: list[list[float] | None] = field(default_factory=list)  # per point
 
 
-def index_scans(text: str) -> list[tuple[int, int, int]]:
+_SCAN_START = re.compile(r"(?m)^#S (\d+)")
+_SCAN_START_BYTES = re.compile(rb"(?m)^#S (\d+)")
+
+
+def index_scans(text: str | bytes) -> list[tuple[int, int, int]]:
     """One sequential pass over the file: [(scan_number, start, end)].
 
-    `start` is the byte offset of the `#S` line; `end` the offset one
-    past the block (next `#S` or EOF).  Mirrors SpecDataFile.index().
+    `start` is the offset of the `#S` line; `end` the offset one past the
+    block (next `#S` or EOF).  Offsets count characters for `str` input
+    and bytes for `bytes` input.  Mirrors SpecDataFile.index().
     """
-    out: list[tuple[int, int, int]] = []
-    pos = 0
-    starts: list[tuple[int, int]] = []
-    for m in re.finditer(r"(?m)^#S (\d+)", text):
-        starts.append((int(m.group(1)), m.start()))
-    for i, (num, start) in enumerate(starts):
-        end = starts[i + 1][1] if i + 1 < len(starts) else len(text)
-        out.append((num, start, end))
-    del pos
-    return out
+    pat = _SCAN_START_BYTES if isinstance(text, bytes) else _SCAN_START
+    starts = [(int(m.group(1)), m.start()) for m in pat.finditer(text)]
+    ends = [start for _, start in starts[1:]] + [len(text)]
+    return [(num, start, end) for (num, start), end in zip(starts, ends)]
+
+
+def header_end(text: str | bytes) -> int:
+    """Offset where the pre-first-#S header block ends: the newline
+    before the first `#S` line, or EOF when no line follows it."""
+    stop = text.find(b"\n#S " if isinstance(text, bytes) else "\n#S ")
+    return len(text) if stop < 0 else stop
 
 
 def parse_file_header(text: str) -> FileHeader:
     """Parse the pre-first-#S header block."""
     hdr = FileHeader()
-    stop = text.find("\n#S ")
-    block = text if stop < 0 else text[:stop]
+    block = text[: header_end(text)]
     motor_lines: dict[int, list[str]] = {}
     for line in block.splitlines():
         if line.startswith("#F"):

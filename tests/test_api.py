@@ -197,3 +197,28 @@ def test_scan_plot_png(spark, spec_dir):
     assert isinstance(scan.plot("Detector", x=cols[0]), bytes)
     with _pytest.raises(ValueError, match="not in"):
         scan.plot("Detecotr")
+
+
+def test_handle_is_a_snapshot_until_reload(spark, spec_dir, tmp_path):
+    """A handle keeps the scan index its frames were planned with, as
+    pyspec's SpecDataFile keeps its index: an appended scan is invisible
+    to the same handle and visible through reload()."""
+    import shutil
+
+    from pyspec_spark.api import SpecDataFile
+
+    base, truth = spec_dir
+    f = tmp_path / "grow.dat"
+    shutil.copyfile(os.path.join(base, "exp0.dat"), f)
+    sf = SpecDataFile(spark, str(f))
+    assert sf[3] is sf[3] and sf.points() is sf.points()
+    n0 = sf.points().count()
+    text = f.read_text()
+    block = text[text.rindex("#S "):]
+    old = block.split()[1]
+    with open(f, "a") as dst:
+        dst.write("\n" + block.replace(f"#S {old}", "#S 99999"))
+    assert sf.points().count() == n0
+    fresh = sf.reload()
+    assert fresh.points().count() > n0
+    assert fresh[99999].meta()["scan_number"] == 99999

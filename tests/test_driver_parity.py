@@ -5,8 +5,8 @@ could see: r6/r7 q_embed_cov (oracle-build numerics) and r8
 q_spec_roundtrip (the driver's default-conf session leaves
 ``spark.sql.python.filterPushdown.enabled`` false, and Spark 4.1
 hard-fails any Python DataSource reader that defines ``pushFilters``
-under that conf).  The local harness could never catch the second
-class because session.py force-enables the conf.
+under that conf).  The local harness could not catch the second
+class while session.py force-enabled the conf.
 
 This module closes the class: it flips every runtime conf that
 session.py customizes back to the DRIVER's defaults, then runs the
@@ -23,8 +23,8 @@ import pytest
 
 from tests.conftest import SF_SMALL
 
-# session.py customizations that a default driver session would NOT
-# have, with their Spark 4.1 defaults.  (shuffle.partitions / AQE are
+# Confs a harness session may set that a default driver session would
+# NOT have, with their Spark 4.1 defaults.  (shuffle.partitions / AQE are
 # perf-only; the correctness-relevant ones are listed.)
 _DRIVER_DEFAULTS = {
     "spark.sql.python.filterPushdown.enabled": "false",  # THE r8 red
@@ -86,48 +86,37 @@ def driver_confs(spark):
             spark.conf.set(k, v)
 
 
-def test_pushdown_disabled_session_would_have_caught_r8(driver_confs, tmp_path):
-    """The exact r8 failure: under filterPushdown=false, a reader that
-    defines pushFilters dies with DATA_SOURCE_PUSHDOWN_DISABLED — and
-    the fixed front door (read_spec) survives by serving the base
-    reader.  Asserting BOTH proves this test would have caught the
-    original defect."""
-    from pyspec_spark.sources.spec_datasource import (
-        SpecDataSourceReader,
-        read_spec,
-        register,
-    )
+def test_option_pruned_read_under_pushdown_disabled_session(driver_confs, tmp_path):
+    """The conf-dependent failure: under filterPushdown=false, Spark 4.1 fails
+    any Python DataSource reader that defines pushFilters with
+    DATA_SOURCE_PUSHDOWN_DISABLED.  No class of the SPEC source may
+    define it, and its pruned read (the ``scans`` option) must work
+    under the driver's default conf."""
+    import inspect
+
+    from pyspec_spark.sources import spec_datasource
+    from pyspec_spark.sources.spec_datasource import read_spec
 
     spark = driver_confs
     assert spark.conf.get("spark.sql.python.filterPushdown.enabled") == "false"
-    # the base reader must never carry pushFilters
-    assert "pushFilters" not in SpecDataSourceReader.__dict__
+    defined = [
+        c for _, c in inspect.getmembers(spec_datasource, inspect.isclass)
+        if c.__module__ == spec_datasource.__name__
+    ]
+    assert defined
+    assert [c.__name__ for c in defined if "pushFilters" in vars(c)] == []
 
     f = tmp_path / "parity.spec"
     f.write_text(
         "#F parity.spec\n#E 1\n#O0 th\n\n"
         "#S 1 ascan th 0 1 1 1\n#N 2\n#L a  b\n1 2\n3 4\n\n"
+        "#S 2 ascan th 0 1 2 1\n#N 2\n#L a  b\n5 6\n7 8\n9 10\n"
     )
-    register(spark)
-    # conf stays false after register() only if it is static; re-force
-    # false to model the driver (register best-effort enables it)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
-
-    # (1) the old code path (pushdown reader under a false conf) fails
-    # loudly — the regression this module exists to catch
-    with pytest.raises(Exception, match="DATA_SOURCE_PUSHDOWN_DISABLED"):
-        (
-            spark.read.format("specfile")
-            .option("path", str(f))
-            .option("pushdown", "true")
-            .load()
-            .collect()
-        )
-    # (2) the fixed front door works without the conf
-    rows = read_spec(spark, str(f)).collect()
-    assert len(rows) == 2
-    # read_spec must NOT have opted into pushdown under a false conf
-    # (it sniffs the live conf) — already proven by not raising above.
+    assert len(read_spec(spark, str(f)).collect()) == 5
+    rows = read_spec(spark, str(f), scans=[2]).collect()
+    assert [(r["scan_number"], r["point_index"]) for r in rows] == [
+        (2, 0), (2, 1), (2, 2)
+    ]
 
 
 @pytest.mark.parametrize("name", _ROUNDTRIP_FAMILY)

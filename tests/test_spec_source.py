@@ -105,49 +105,101 @@ def test_duplicate_scan_number_kept(registered, spec_dir):
     assert len(dups) == 2
 
 
-def test_scan_number_pushdown_prunes_partitions(registered, spec_dir):
-    """scan_number predicates must prune scan-block partitions in the
+def test_scans_option_prunes_partitions(registered, spec_dir):
+    """The ``scans`` read option must prune scan-block partitions in the
     reader (the distributed twin of pyspec's byte-offset index)."""
-    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, LessThan
-
-    from pyspec_spark.sources.spec_datasource import (
-        SpecDataSourceReader,
-        SpecPushdownReader,
-    )
+    from pyspec_spark.sources.spec_datasource import SpecDataSourceReader, read_spec
 
     spark = registered
     base, _ = spec_dir
-    # end-to-end: filtered read returns the right rows (pushdown opted in)
-    assert (
-        _points(spark, base, pushdown="true").where("scan_number = 5").count()
-        == 3 * 81
-    )
-    # the BASE reader must NOT define pushFilters (Spark 4.1 hard-fails a
-    # pushFilters-bearing reader when the session conf is false — the r8
-    # driver red; pushdown is an opt-in subclass)
-    assert "pushFilters" not in SpecDataSourceReader.__dict__
-    # reader-level: partition list shrinks under pushdown
-    full = SpecPushdownReader({"path": base}, "points")
+    # end-to-end: the option-pruned read returns exactly the listed scans
+    assert _points(spark, base, scans="5").count() == 3 * 81
+    # reader-level: the partition list shrinks to the listed scans
+    full = SpecDataSourceReader({"path": base}, "points")
     assert len(full.partitions()) == 3 * 25 + 1  # 25 scans/file + 1 dup block
-    eq = SpecPushdownReader({"path": base}, "points")
-    rejected = list(eq.pushFilters([EqualTo(("scan_number",), 5)]))
-    assert rejected == []
+    eq = SpecDataSourceReader({"path": base, "scans": "5"}, "points")
     assert len(eq.partitions()) == 3  # one block per file
-    rng = SpecPushdownReader({"path": base}, "points")
-    list(rng.pushFilters([GreaterThanOrEqual(("scan_number",), 10), LessThan(("scan_number",), 12)]))
-    assert len(rng.partitions()) == 6  # scans 10,11 in each of 3 files
-    # IN-list (what .isin()/.where("IN (...)") push down; In.value tuple)
-    from pyspark.sql.datasource import In
+    two = SpecDataSourceReader({"path": base, "scans": "2,5"}, "points")
+    assert len(two.partitions()) == 6  # scans 2,5 in each of 3 files
+    assert read_spec(spark, base, scans=[5, 2]).count() == 3 * 2 * 81
+    # no listed scan exists: one sentinel partition that yields nothing
+    none = SpecDataSourceReader({"path": base, "scans": "9999"}, "points")
+    assert [list(none.read(p)) for p in none.partitions()] == [[]]
+    # a range predicate on an unpruned frame is filtered after the parse
+    # (no pushdown); its count must still be exact
+    got = _points(spark, base).where("scan_number >= 10 AND scan_number < 12")
+    assert {r["scan_number"] for r in got.select("scan_number").collect()} == {10, 11}
+    assert got.count() == 3 * (41 + 81)
 
-    inr = SpecPushdownReader({"path": base}, "points")
-    assert list(inr.pushFilters([In(("scan_number",), (2, 5))])) == []
-    assert len(inr.partitions()) == 6  # scans 2,5 in each of 3 files
-    assert (
-        _points(spark, base, pushdown="true")
-        .where(F.col("scan_number").isin(2, 5))
-        .count()
-        == 3 * 2 * 81
+
+def test_filtered_query_leaves_frame_unpruned(registered, spec_dir):
+    """Spark reuses a loaded frame's planned read across queries, so a
+    filtered count must not shrink a later unfiltered count of the same
+    frame (a reader that pruned on pushed filters answered 3 x 81)."""
+    from pyspec_spark.sources.spec_datasource import read_spec
+
+    spark = registered
+    base, _ = spec_dir
+    pts = read_spec(spark, base)
+    full = pts.count()
+    assert pts.where(F.col("scan_number") == 5).count() == 3 * 81
+    assert pts.count() == full
+
+
+def test_union_of_filtered_branches_keeps_both_scans(registered, spec_dir):
+    """Two differently-filtered branches of one read_spec frame share
+    its planned read; their union must return both scans."""
+    from pyspec_spark.sources.spec_datasource import read_spec
+
+    spark = registered
+    base, _ = spec_dir
+    r = read_spec(spark, base)
+    u = r.where(F.col("scan_number") == 3).union(r.where(F.col("scan_number") == 5))
+    got = u.groupBy("scan_number").count().collect()
+    assert {row["scan_number"]: row["count"] for row in got} == {3: 3 * 11, 5: 3 * 81}
+
+
+def test_non_ascii_bytes_parse_like_whole_file(registered, tmp_path):
+    """Partitions read the header and their block by byte offset; with
+    multi-byte and invalid UTF-8 before and inside scan blocks, the rows
+    equal a parse of the whole decoded file."""
+    from pyspec_spark.sources.spec_datasource import SpecDataSourceReader
+    from pyspec_spark.sources.spec_format import (
+        index_scans,
+        parse_file_header,
+        parse_scan_block,
     )
+
+    raw = (
+        "#F ü.spec\n#E 1\n#C Grüße, µ-Probe — ok\n#O0 th  tth\n\n"
+        "#S 1 ascan th 0 1 1 1\n#P0 1.5 2.5\n#C Détecteur réglé ✓\n"
+        "#N 2\n#L a  b\n1 2\n3 4\n\n"
+        "#S 2 ascan th 0 1 2 1\n#P0 3 4\n#C naïve — ζ\n#N 2\n#L a  b\n"
+        "5 6\n7 8\n9 10\n"
+    ).encode() + b"#C bad \xff\xfe bytes\n"
+    f = tmp_path / "utf8.spec"
+    f.write_bytes(raw)
+    text = raw.decode("utf-8", errors="replace")
+    motors = parse_file_header(text).motor_names
+    assert motors == ["th", "tth"]
+    for table in ("points", "scans"):
+        want = []
+        for _, s, e in index_scans(text):
+            scan = parse_scan_block(text[s:e], motors)
+            if table == "scans":
+                want.append((scan.scan_number, scan.command, scan.motors))
+            else:
+                want += [(scan.scan_number, i, dict(zip(scan.columns, row)))
+                         for i, row in enumerate(scan.data)]
+        reader = SpecDataSourceReader({"path": str(f)}, table)
+        got = [row for p in reader.partitions() for row in reader.read(p)]
+        if table == "scans":
+            got = [(r[1], r[2], r[9]) for r in got]
+        else:
+            got = [(r[1], r[2], r[3]) for r in got]
+        assert got == want and len(want) == (2 if table == "scans" else 5)
+    df = registered.read.format("specfile").option("path", str(f)).load()
+    assert df.count() == 5
 
 
 def test_reload_append_pattern(registered, spec_dir, tmp_path):

@@ -9,8 +9,7 @@ runs at driver scale can be committed as evidence.
 
 With --driver-session, the Spark session is a PLAIN
 ``SparkSession.builder.master(...).getOrCreate()`` — none of
-session.py's confs (no arrow flag, no filterPushdown enable, no AQE/
-broadcast tuning).  This mimics the driver's default-conf session, the
+session.py's confs (no arrow flag, no AQE/broadcast tuning).  This mimics the driver's default-conf session, the
 environment class that produced two only-visible-in-the-driver reds
 (r6/r7 q_embed_cov, r8 q_spec_roundtrip DATA_SOURCE_PUSHDOWN_DISABLED):
 any query that silently depends on a session conf fails HERE first.
