@@ -45,32 +45,15 @@ _PERMANENT = [
     "q_grid3d",            # A4 scientific gridder
     "q_rot3",              # X1 ccdToQ
 ]
-# Queries added THIS round ride in the window ahead of the rotation:
-# the judge's done-criteria for new subsystems require a hard driver
-# row in the same round.  They drop out of this list next round and
-# join the normal staleness rotation.
-_FRESH: list[str] = [
-    "q_ann_lake_pq",        # r13: PQ-coded maintained vector lake (L5e)
-    "q_ann_lake_pq_batch",  # r13: batch serving through the PQ lake (L5f)
-    "q_train_mix_delta",    # r13: versioned/incremental mix (L46d)
-    "q_mix_alloc_drift",    # r13: the L46d allocation-drift report
-    "q_video_phash_dedup",  # r13: video perceptual near-dup (L37b)
-    # reworked this round — force same-round driver rows for the
-    # refactored allocation path even if the rotation skips them:
-    "q_train_mix_curated",  # r13: rewired onto _alloc_micro_over
-]
-# r10 rotation rework (VERDICT r9 task 4): cumulative driver coverage
-# is COMPLETE (195/195 oracle queries have a hard green row across
-# r01–r09), so "least-checked" has no gaps left to drain and its job
-# changes from coverage to REGRESSION DETECTION: rotate by STALENESS —
-# oldest last-sampled round first — so the window continuously
-# re-samples whatever the driver has not looked at for the longest.
-# New oracle queries still enter via _FRESH (never the rotation): a
-# never-sampled query has no last-green round, would sort first under
-# staleness too, but _FRESH guarantees the same-round driver row the
-# judge's done-criteria require regardless of pool dynamics (the r8
-# seen=0 displacement gotcha is moot under staleness sort, documented
-# here for the next rebalance).
+# Newly added oracle queries ride in the window ahead of the rotation
+# for one round, so a new subsystem is sampled straight away; then
+# they leave this list and join the staleness rotation.
+_FRESH: list[str] = []
+# The rest of the window rotates by STALENESS — oldest last-sampled
+# round first — so it continuously re-samples whatever the correctness
+# pass has not looked at for the longest (every oracle query already
+# has a green row, so the rotation's job is regression detection, not
+# coverage).  New oracle queries enter via _FRESH, never the rotation.
 _ROTATE_K = 42 - len(_FRESH)
 
 

@@ -33,6 +33,27 @@ partition values — no directory walks), data files are written once
 and cached aggressively, and maintenance (vacuum) is a pure metadata
 diff.  The local-FS ``os.link`` commit generalizes to any store with
 a conditional-put primitive.
+
+**The one publish protocol.**  Every file the engine publishes for a
+concurrent reader — lake manifests and tags, the index CURRENT
+pointers and their HISTORY, the term-index maintenance markers and
+transaction locks, the RAG and training-mix markers, the frozen
+vector codebooks — goes through the two primitives below, and no
+other module calls ``os.link`` or ``os.replace``:
+
+- ``write_new(path, text)``: write a ``.tmp-<uuid>`` file beside the
+  target, ``os.link`` it into place, unlink the temp.  Raises
+  ``FileExistsError`` if the target exists (compare-and-swap: one
+  winner per name, the loser's bytes never land).
+- ``write_replace(path, text)``: the same temp file, then
+  ``os.replace`` (last writer wins; a reader sees the old bytes or
+  the new, never a partial file).
+
+The dot-prefixed temp name keeps it out of every ``*.json`` / ``v*``
+glob and of Spark's file listing, and the uuid keeps two concurrent
+writers off one temp.  The CURRENT-pointer lifecycle shared by the
+vector and term indexes (``publish_root`` / ``current_root`` /
+``root_history`` / ``vacuum_roots``) is built on the same primitives.
 """
 
 from __future__ import annotations
@@ -43,6 +64,7 @@ import os
 import shutil
 import urllib.parse
 import uuid
+from collections.abc import Callable
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +86,145 @@ class LakeConflict(RuntimeError):
 # interleaved first commit trips LakeConflict instead of silently
 # serializing on top of data the caller never saw).
 _UNSET = object()
+
+
+def _write_tmp(path: str, text: str) -> str:
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    return tmp
+
+
+def write_new(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` only if nothing is there yet (the
+    CAS of the module docstring).  Raises FileExistsError, leaving the
+    existing file untouched, when another writer got there first."""
+    tmp = _write_tmp(path, text)
+    try:
+        os.link(tmp, path)
+    finally:
+        os.unlink(tmp)
+
+
+def write_replace(path: str, text: str) -> None:
+    """Atomically publish ``text`` at ``path``, replacing any previous
+    file: a concurrent reader sees the old bytes or the new ones."""
+    tmp = _write_tmp(path, text)
+    try:
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
+# ---------------------------------------------------------------------------
+# CURRENT-pointer lifecycle over built roots (the vector and term
+# indexes).  A builder writes a NEW root by contract; ``publish_root``
+# points base/CURRENT at it with one write_replace, so a concurrent
+# reader resolves either the old root or the new one, never a partial
+# pointer.  HISTORY is appended AFTER the swap, so CURRENT stays
+# authoritative if the append is lost to a crash.  Readers that
+# re-resolve CURRENT per query are never affected by vacuum; a reader
+# pinned to a reclaimed root fails LOUDLY on its next scan (missing
+# files), never silently.  ``is_root`` is the caller's root-shape
+# check (a codebook file, a term-index bucket layout).
+# ---------------------------------------------------------------------------
+_POINTER_FILE = "CURRENT"
+_HISTORY_FILE = "HISTORY"
+
+
+def publish_root(
+    base: str, root: str, is_root: Callable[[str], bool], kind: str
+) -> None:
+    """Atomically point base/CURRENT at a built ``root`` and record it
+    in base/HISTORY.  Refuses a path ``is_root`` rejects: publishing a
+    half-built or mistyped root would break every re-resolving reader
+    at once."""
+    if not is_root(root):
+        raise ValueError(f"{root} is not a {kind} root")
+    os.makedirs(base, exist_ok=True)
+    write_replace(os.path.join(base, _POINTER_FILE), os.path.abspath(root))
+    with open(os.path.join(base, _HISTORY_FILE), "a") as f:
+        f.write(os.path.abspath(root) + "\n")
+
+
+def current_root(base: str) -> str:
+    """Resolve the published root (re-resolve per query — the vacuum
+    retention contract)."""
+    with open(os.path.join(base, _POINTER_FILE)) as f:
+        return f.read().strip()
+
+
+def root_history(base: str) -> list[str]:
+    """Ordered distinct publish history (oldest first; re-publishing an
+    old root moves it to newest)."""
+    path = os.path.join(base, _HISTORY_FILE)
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        raw = [ln.strip() for ln in f if ln.strip()]
+    out: list[str] = []
+    for r in raw:
+        if r in out:
+            out.remove(r)
+        out.append(r)
+    return out
+
+
+def vacuum_roots(
+    base: str,
+    is_root: Callable[[str], bool],
+    keep: int = 1,
+    retention_seconds: float = 3600.0,
+) -> list[str]:
+    """Root GC under ``base``.  Deletes:
+
+    - **superseded roots**: HISTORY entries older than the newest
+      ``keep`` — committed history, reclaimed regardless of age (the
+      lake_vacuum expired-manifest rule).  The CURRENT root is never
+      deleted, whatever ``keep`` says.
+    - **orphan roots**: directories under ``base/`` that ``is_root``
+      accepts but were never published — only when older than
+      ``retention_seconds``: a root a CONCURRENT rebuild is still
+      writing looks identical to an abort-orphan, and deleting it
+      would break the builder's upcoming publish.
+
+    Readers must re-resolve CURRENT at least every
+    ``retention_seconds``.  Rewrites HISTORY to the kept entries and
+    returns the deleted root paths."""
+    import time
+
+    try:
+        current = os.path.abspath(current_root(base))
+    except FileNotFoundError:
+        current = None
+    hist = root_history(base)
+    keep_roots = set(hist[-max(keep, 1):])
+    if current:
+        keep_roots.add(current)
+    removed: list[str] = []
+    for r in hist:
+        if r not in keep_roots and os.path.isdir(r):
+            shutil.rmtree(r, ignore_errors=True)
+            removed.append(r)
+    now = time.time()
+    known = set(hist) | keep_roots
+    for name in sorted(os.listdir(base)):
+        p = os.path.abspath(os.path.join(base, name))
+        if not os.path.isdir(p) or p in known or not is_root(p):
+            continue
+        try:
+            if now - os.path.getmtime(p) < retention_seconds:
+                continue  # possibly an in-flight rebuild
+        except OSError:
+            continue
+        shutil.rmtree(p, ignore_errors=True)
+        removed.append(p)
+    kept = [r for r in hist if r in keep_roots]
+    write_replace(
+        os.path.join(base, _HISTORY_FILE), "".join(r + "\n" for r in kept)
+    )
+    return removed
 
 
 def _manifest_path(root: str, version: int) -> str:
@@ -149,7 +310,7 @@ def _commit(
             and pm.get("schema") is not None
             and pm["schema"] != schema
         )
-        # the column-id mapping (rename/retype, r11) rides every commit
+        # the column-id mapping (rename/retype) rides every commit
         # that carries parent files forward — a writer unaware of the
         # mapping must not silently revert logical names.  Full-rewrite
         # commits (retains_parent=False) stage from the MAPPED logical
@@ -159,7 +320,7 @@ def _commit(
             columns = pm.get("columns")
         if schemas is _UNSET:
             schemas = pm.get("schemas")
-    # the cluster col (r12) is a LAYOUT property like partition_col:
+    # the cluster col is a LAYOUT property like partition_col:
     # inherit from the parent unless the caller explicitly changes it,
     # so row-level ops and plain appends preserve the clustered layout
     # without every call site repeating it
@@ -188,19 +349,12 @@ def _commit(
     if columns:
         manifest["columns"] = columns
         manifest["schemas"] = schemas or {}
-    tmp = os.path.join(
-        root, _MANIFEST_DIR, f".tmp-{uuid.uuid4().hex}.json"
-    )
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
     try:
-        os.link(tmp, _manifest_path(root, version))
+        write_new(_manifest_path(root, version), json.dumps(manifest))
     except FileExistsError:
         raise LakeConflict(
             f"version {version} already committed under {root}"
         ) from None
-    finally:
-        os.unlink(tmp)
     return version
 
 
@@ -916,22 +1070,20 @@ def lake_tag(
     if v is None or v not in set(_versions(root)):
         raise ValueError(f"version {version!r} not committed under {root}")
     p = _tag_path(root, name)
-    if os.path.exists(p) and not replace:
-        raise FileExistsError(
-            f"tag {name!r} exists (-> v{json.load(open(p))['version']}); "
-            "pass replace=True to move it"
-        )
     os.makedirs(os.path.dirname(p), exist_ok=True)
-    tmp = f"{p}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": v,
-                "created": datetime.now(timezone.utc).isoformat(),
-            },
-            f,
-        )
-    os.replace(tmp, p)
+    text = json.dumps(
+        {"version": v, "created": datetime.now(timezone.utc).isoformat()}
+    )
+    if replace:
+        write_replace(p, text)
+        return v
+    try:
+        write_new(p, text)
+    except FileExistsError:
+        raise FileExistsError(
+            f"tag {name!r} exists (-> v{resolve_tag(root, name)}); "
+            "pass replace=True to move it"
+        ) from None
     return v
 
 

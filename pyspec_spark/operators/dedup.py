@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspec_spark.tables import input_bytes
+
 
 def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("_toks", F.split(F.col(text_col), " "))
@@ -74,44 +76,27 @@ def shingles(df: DataFrame, text_col: str = "text", k: int = 2) -> DataFrame:
     return df.withColumn("_shingles", F.expr(guarded))
 
 
-# Broadcast budget for the distinct-shingle hash table (r14, VERDICT
-# r13 item 3).  The table's built size is ~n_hashes * 48 bytes per
-# DISTINCT shingle (64 boxed 32-hex-char UTF8Strings per row), so it is
-# VOCABULARY-bounded, not corpus-bounded — but vocabulary grows with
-# corpus bytes (Heaps), and an explicit broadcast() hint is exempt from
-# AQE demotion, so past some input size the hint must be dropped, not
-# demoted at runtime.  The gate is driver-side and job-free (the fanout
-# estimator's discipline): sum of the frame's input file sizes vs this
-# threshold.  4 MB of compressed parquet gives ~7x headroom over the
-# bench corpus (594 KB -> 931 distinct shingles -> ~2.9 MB built table,
-# measured r14) while even an adversarial all-unique-token corpus at
-# the threshold stays bounded (~4 MB/6 B/token * 3.1 KB/row ~ low GB,
-# never the 100 TB regime); real corpora flip to the shuffled-hash arm
-# long before the table could approach executor memory.  The non-
-# broadcast arm pins the BUILD SIDE via a SHUFFLE_HASH hint on the
-# hash table — left to its estimates the planner inverted the join
-# (broadcast the corpus-sized pair side, serializing the downstream
-# aggregation onto one AQE-coalesced task; measured 10.6 s at sf0.1,
-# r13) — and stays a shingle-keyed equi-join whose skew AQE splits.
+# Broadcast budget for the distinct-shingle hash table.  The table's
+# built size is ~n_hashes * 48 bytes per DISTINCT shingle (64 boxed
+# 32-hex-char UTF8Strings per row), so it is VOCABULARY-bounded, not
+# corpus-bounded — but vocabulary grows with corpus bytes (Heaps), and
+# an explicit broadcast() hint is exempt from AQE demotion, so past
+# some input size the hint must be dropped, not demoted at runtime.
+# The gate is driver-side and job-free: tables.input_bytes (the frame's
+# input file sizes) vs this threshold, with an unestimable input
+# (remote, in-memory) taking the shuffled arm.  4 MB of compressed
+# parquet gives ~7x headroom over the bench corpus (594 KB -> 931
+# distinct shingles -> ~2.9 MB built table) while even an adversarial
+# all-unique-token corpus at the threshold stays bounded (~4 MB/6
+# B/token * 3.1 KB/row ~ low GB, never the 100 TB regime); real
+# corpora flip to the shuffled-hash arm long before the table could
+# approach executor memory.  The non-broadcast arm pins the BUILD SIDE
+# via a SHUFFLE_HASH hint on the hash table — left to its estimates
+# the planner inverted the join (broadcast the corpus-sized pair side,
+# serializing the downstream aggregation onto one AQE-coalesced task;
+# measured 10.6 s at sf0.1) — and stays a shingle-keyed equi-join
+# whose skew AQE splits.
 _BCAST_HASHES_MAX_INPUT_BYTES = 4 * 1024 * 1024
-
-
-def _local_input_bytes(df: DataFrame) -> int | None:
-    """Sum of the frame's local input file sizes; None when any input
-    is remote or the estimate fails (callers treat None as 'big')."""
-    import os
-    from urllib.parse import urlparse
-
-    try:
-        total = 0
-        for uri in df.inputFiles():
-            p = urlparse(uri)
-            if p.scheme not in ("file", ""):
-                return None
-            total += os.path.getsize(p.path)
-        return total
-    except Exception:
-        return None
 
 
 def minhash_signatures(
@@ -120,7 +105,6 @@ def minhash_signatures(
     text_col: str = "text",
     n_hashes: int = 64,
     shingle_k: int = 2,
-    broadcast_hashes: bool | None = None,
 ) -> DataFrame:
     """(id, sig ARRAY<STRING>[n_hashes]) via explode + n_hashes min
     aggregates — one shuffle of per-doc partial signatures.
@@ -129,7 +113,7 @@ def minhash_signatures(
     folded in by concatenation.  md5 hex digests are engine-portable, so
     the signatures (and everything derived from them) hash-match DuckDB.
 
-    Shape rationale (round 4): the obvious map-only form —
+    Shape rationale: the obvious map-only form —
     transform(sequence(0, n-1), i -> array_min(transform(shingles, s ->
     md5(...)))) — re-evaluates the entire shingle build once per salt
     (Catalyst inlines the array expression into the outer lambda), and
@@ -141,30 +125,25 @@ def minhash_signatures(
     only map-side partial signatures (n_docs x n_hashes x 32 hex chars
     per partition), far below corpus bytes — scale-safe.
 
-    r13 (optimization guide §1.2 "don't compute things you throw
-    away"): the salted digests are a function of the SHINGLE alone, yet
-    the round-4 shape recomputed them once per (doc, shingle) pair —
-    at sf0.1 that is 256 477 pairs over only 931 distinct shingles, so
-    >99.6% of the 16.4M md5 evaluations were repeats.  The hashes are
-    now computed once per DISTINCT shingle and attached back to the
-    pairs by an equi-join on the shingle before the per-doc min
-    aggregation.  Every md5 input is unchanged, so the signatures are
-    bit-identical.  The hash table costs one aggregation exchange of
-    the (shingle) partials.
+    Hashes are computed once per DISTINCT shingle (optimization guide
+    §1.2 "don't compute things you throw away"): the salted digests
+    are a function of the shingle alone, and at sf0.1 the 256 477
+    (doc, shingle) pairs cover only 931 distinct shingles.  The hashes
+    are attached back to the pairs by an equi-join on the shingle
+    before the per-doc min aggregation, so every md5 input — and every
+    signature — is the same as in the per-pair form.  The hash table
+    costs one aggregation exchange of the (shingle) partials.
 
-    r14 (VERDICT r13 item 3): the join strategy is size-GATED instead
-    of unconditionally hinted.  ``broadcast_hashes=None`` derives the
-    arm from the input's estimated on-disk bytes
-    (`_BCAST_HASHES_MAX_INPUT_BYTES` — rationale and measurements
-    above): small inputs pin ``broadcast(hashed)`` (the r13 behavior;
-    an unhinted plan inverts the join, see the constant's note), large
-    or remote inputs pin the hash table as the SHUFFLE_HASH build side
-    of a shingle-keyed equi-join — no driver/executor broadcast of a
-    vocabulary-sized table, and AQE splits hot-shingle skew (a hot
-    shingle is bounded by its document frequency, the same quantity
-    the Jaccard path caps).  Both arms are the same equi-join on the
-    same bit-identical inputs, so results cannot move (probe:
-    tools/scale_probe_r14a.py, SCALING.md r14a).
+    The join strategy is size-gated on the input's estimated on-disk
+    bytes (`_BCAST_HASHES_MAX_INPUT_BYTES` — rationale and
+    measurements above): small file inputs pin ``broadcast(hashed)``
+    (an unhinted plan inverts the join, see the constant's note);
+    large, remote or in-memory inputs pin the hash table as the
+    SHUFFLE_HASH build side of a shingle-keyed equi-join — no
+    driver/executor broadcast of a vocabulary-sized table, and AQE
+    splits hot-shingle skew (a hot shingle is bounded by its document
+    frequency, the same quantity the Jaccard path caps).  Both arms
+    are the same equi-join on the same inputs, so results cannot move.
     """
     with_sh = shingles(df, text_col, shingle_k)
     # Sub-k-token docs have no shingles and therefore no signature: the
@@ -194,12 +173,9 @@ def minhash_signatures(
             ",".join(f"min(_hs[{i}])" for i in range(n_hashes))
         )
     )
-    if broadcast_hashes is None:
-        nbytes = _local_input_bytes(df)
-        broadcast_hashes = (
-            nbytes is not None and nbytes <= _BCAST_HASHES_MAX_INPUT_BYTES
-        )
-    build = F.broadcast(hashed) if broadcast_hashes else hashed.hint("SHUFFLE_HASH")
+    nbytes = input_bytes(df)
+    small = nbytes is not None and nbytes <= _BCAST_HASHES_MAX_INPUT_BYTES
+    build = F.broadcast(hashed) if small else hashed.hint("SHUFFLE_HASH")
     return ex.join(build, "_sh").groupBy("id").agg(sig)
 
 
@@ -291,11 +267,11 @@ def minhash_neardup(
     full-text shuffle would be pure cost."""
     if pre_partition:
         df = df.repartition(pre_partition, id_col)
-    # Tracked persist (r14, VERDICT r13 item 5): the signature table
-    # feeds three consumers (candidates + both verify join sides); a
-    # bare .cache() here lived for the session — harnesses cleared it,
-    # but a long-lived production session would accumulate executor
-    # memory.  track_persist bounds it and release_persisted() drains.
+    # Tracked persist: the signature table feeds three consumers
+    # (candidates + both verify join sides).  The tag is unique per
+    # call, so track_persist's one-frame-per-name eviction never fires
+    # here: every call's frame stays cached until a caller drains the
+    # registry with release_persisted().
     from pyspec_spark.registry import PERSIST_SEQ, track_persist
 
     sigs = track_persist(

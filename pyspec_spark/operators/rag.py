@@ -62,11 +62,10 @@ def read_rag_marker(index_root: str) -> dict | None:
 
 
 def _write_marker(index_root: str, payload: dict) -> None:
+    from pyspec_spark.lake import write_replace
+
     os.makedirs(index_root, exist_ok=True)
-    tmp = f"{_marker_path(index_root)}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, _marker_path(index_root))
+    write_replace(_marker_path(index_root), json.dumps(payload))
 
 
 def chunk_vec_id() -> F.Column:

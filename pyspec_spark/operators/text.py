@@ -14,6 +14,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspec_spark.lake import (
+    current_root,
+    publish_root,
+    root_history,
+    vacuum_roots,
+    write_new,
+    write_replace,
+)
+
 # BPE-ish pretokenizer: word pieces OR single non-space symbols (the
 # regex shape GPT-style BPE vocabularies use for pretokenization)
 BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -391,83 +400,6 @@ def _ngrams_with_pos(toks: DataFrame, n: int) -> DataFrame:
     )
 
 
-def _ngrams_with_pos_arrow(
-    df: DataFrame, n: int, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, start, g) from raw (id, text) rows — the byte-slice
-    mapInArrow form of :func:`_ngrams_with_pos` (r13 session 4, guide
-    §4.2, the queries/llm._grams8_md5 precedent).  Reached via
-    ``duplicated_span_stats(..., arrow=True)`` — the scale knob for
-    corpora where gram-construction CPU is the actual wall (SCALING.md
-    r13d measures the crossover); the bench-scale default stays the
-    JVM form (see the note there).
-
-    Because the tokenizer is a SINGLE-SPACE split and the gram joiner a
-    single space, text == ' '.join(text.split(' ')) holds for every
-    string, so the n-token gram at 1-based position i is exactly the
-    BYTE SLICE of the UTF-8 text between token i's first byte and token
-    (i+n-1)'s last byte (0x20 cannot occur inside a multi-byte UTF-8
-    sequence).  One np.flatnonzero over the byte buffer finds every
-    boundary; each gram is a bytes slice handed to Arrow as-is — no
-    per-position JVM array slice + concat_ws allocation (the dominant
-    stage CPU of the JVM form: profiled 8.9 s across
-    q_substr_dup_spans' stages at sf0.1, the gram subtree evaluated
-    once per consuming stage, vs 0.23 s single-thread for this kernel
-    over the same corpus).  Gram STRINGS are bit-identical to the
-    zip_with/transform form (same bytes), proven as a full-corpus
-    (doc_id, start, g) multiset equality at sf0.1 plus the edge-case
-    pin in tests/test_llm_ops.py; sub-n-token and NULL texts emit
-    nothing and `start` stays int32 — same contract as
-    :func:`_ngrams_with_pos`.
-
-    doc_id values pass through Arrow `take` untouched (any id type);
-    only (id, text) cross the Python boundary (guide §4.1).
-    """
-    import pyarrow as pa
-
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches):
-        import numpy as np
-
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            idxs: list[int] = []
-            out_start: list[int] = []
-            out_g: list[bytes] = []
-            for row_no, txt in enumerate(texts):
-                if txt is None:
-                    continue
-                b = txt.encode("utf-8")
-                arr = np.frombuffer(b, dtype=np.uint8)
-                sp = np.flatnonzero(arr == 32)
-                n_tok = len(sp) + 1
-                if n_tok < n:
-                    continue
-                starts = np.empty(n_tok, dtype=np.int64)
-                starts[0] = 0
-                starts[1:] = sp + 1
-                ends = np.empty(n_tok, dtype=np.int64)
-                ends[:-1] = sp
-                ends[-1] = len(b)
-                for i in range(n_tok - n + 1):
-                    idxs.append(row_no)
-                    out_start.append(i + 1)
-                    out_g.append(b[starts[i] : ends[i + n - 1]])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).take(pa.array(idxs, type=pa.int64())),
-                    pa.array(out_start, type=pa.int32()),
-                    pa.array(out_g, type=pa.string()),
-                ],
-                names=["doc_id", "start", "g"],
-            )
-
-    return df.selectExpr(f"{id_col} AS doc_id", f"{text_col} AS text").mapInArrow(
-        kernel, f"doc_id {id_type}, start int, g string"
-    )
-
-
 def _interval_cover(ss_col, n: int):
     """Union length of intervals [s, s+n-1] over the SORTED start array:
     n for the first + min(n, gap) per successive start."""
@@ -508,38 +440,19 @@ def duplicated_span_stats(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    arrow: bool = False,
 ) -> DataFrame:
     """Per-doc stats of token spans whose exact n-gram occurs in
     >= min_docs distinct documents: (doc_id, n_tokens, dup_ngrams,
     dup_cover, dup_frac).  dup_cover is the merged-interval token count
     — the fraction every curation stack thresholds on before dropping
-    or cleaning a page.
-
-    ``arrow``: build the gram stream with the byte-slice mapInArrow
-    kernel (:func:`_ngrams_with_pos_arrow`) instead of the JVM
-    zip_with/transform form.  Value-identical by construction (multiset
-    identity pinned in tests); a WALL knob, not a semantics knob.  The
-    default stays False because at the bench corpus (short docs, ~50
-    tokens) the per-stage Python-boundary latency exceeds the JVM CPU
-    saved (r13 session 4: +0.3 s at both 32 and 8 cores); past that
-    corpus the kernel is never worse and wins up to ~1.4x in the
-    mid-density range — SCALING.md r13d measures the crossover
-    (ratios jvm/kernel across two runs: 1.09-1.16 at 150 tok/doc,
-    1.23-1.42 at 300, ~parity at 1200 where the 24M-row gram shuffle
-    dominates both arms) — so dense-corpus deployments, where
-    gram-construction CPU is the per-byte bill, should pass True."""
-    # r13 (second pass): projections/filters/coverage as parsed SQL
-    # (1:1 transliteration; same plan, ~700 fewer py4j round trips)
+    or cleaning a page."""
+    # projections/filters/coverage as parsed SQL (same plan as the
+    # Column-chain spelling, ~700 fewer py4j round trips)
     toks = df.selectExpr(
         f"{id_col} AS doc_id", f"split({text_col}, ' ') AS t"
     ).selectExpr("*", "size(t) AS n_tokens")
     base = toks.select("doc_id", "n_tokens")
-    grams = (
-        _ngrams_with_pos_arrow(df, n, text_col, id_col)
-        if arrow
-        else _ngrams_with_pos(toks, n)
-    )
+    grams = _ngrams_with_pos(toks, n)
     dup = (
         grams.groupBy("g")
         .agg(F.expr("COUNT(DISTINCT doc_id)").alias("nd"))
@@ -1238,24 +1151,14 @@ def probe_block_max(
 
 
 # ---------------------------------------------------------------------------
-# Term-index publish lifecycle (r10) — the same CURRENT-pointer
-# discipline the IVF vector index uses (streaming/vectors.py
-# publish_index / vacuum_indexes): compact_term_index and
+# Term-index publish lifecycle: compact_term_index and
 # compact_streamed_index build NEW roots by contract, so a long-lived
-# index accumulates superseded roots unless something swaps a pointer
-# atomically and reclaims history.  Pointer swap = write-tmp +
-# os.replace (one rename syscall — a concurrent reader resolves either
-# the old root or the new one, never a partial pointer); HISTORY is
-# appended AFTER the swap so CURRENT stays authoritative if the append
-# is lost to a crash.  Readers that re-resolve CURRENT per query are
-# never affected by vacuum; a reader pinned to a superseded root fails
-# LOUDLY on its next scan (missing files), never silently.
+# index swaps base/CURRENT between them and reclaims superseded roots
+# through the CURRENT-pointer lifecycle in lake.py (publish_root and
+# siblings — the one the IVF vector index uses).
 # ---------------------------------------------------------------------------
-_POINTER_FILE = "CURRENT"
-_HISTORY_FILE = "HISTORY"
-
-
 def _looks_like_term_index(root: str) -> bool:
+    """tb= bucket dirs, or the _SUCCESS of an empty-corpus write."""
     import os
 
     if not os.path.isdir(root):
@@ -1266,98 +1169,23 @@ def _looks_like_term_index(root: str) -> bool:
 
 
 def publish_term_index(base: str, root: str) -> None:
-    """Atomically point base/CURRENT at a built term-index root.  The
-    root must look like one (tb= bucket dirs, or the _SUCCESS of an
-    empty-corpus write) — publishing a half-typed path would otherwise
-    silently break every re-resolving reader at once."""
-    import os
-    import uuid as _uuid
-
-    if not _looks_like_term_index(root):
-        raise ValueError(f"{root} is not a term-index root")
-    os.makedirs(base, exist_ok=True)
-    tmp = os.path.join(base, f".tmp-{_uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        f.write(os.path.abspath(root))
-    os.replace(tmp, os.path.join(base, _POINTER_FILE))
-    with open(os.path.join(base, _HISTORY_FILE), "a") as f:
-        f.write(os.path.abspath(root) + "\n")
+    """Atomically point base/CURRENT at a built term-index root and
+    append it to base/HISTORY."""
+    publish_root(base, root, _looks_like_term_index, "term-index")
 
 
-def current_term_index(base: str) -> str:
-    """Resolve the published index root (re-resolve per query — the
-    vacuum retention contract)."""
-    import os
-
-    with open(os.path.join(base, _POINTER_FILE)) as f:
-        return f.read().strip()
-
-
-def term_index_history(base: str) -> list[str]:
-    """Ordered distinct publish history (oldest first; re-publishing an
-    old root moves it to newest)."""
-    import os
-
-    path = os.path.join(base, _HISTORY_FILE)
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        raw = [ln.strip() for ln in f if ln.strip()]
-    out: list[str] = []
-    for r in raw:
-        if r in out:
-            out.remove(r)
-        out.append(r)
-    return out
+current_term_index = current_root
+term_index_history = root_history
 
 
 def vacuum_term_indexes(
     base: str, keep: int = 1, retention_seconds: float = 3600.0
 ) -> list[str]:
-    """Term-index GC — the vectors.vacuum_indexes rules verbatim:
-    superseded HISTORY roots beyond the newest ``keep`` are reclaimed
-    regardless of age (committed history; CURRENT never deleted
-    whatever ``keep`` says); unpublished orphan roots under ``base/``
-    (dirs bearing the tb= signature) only past ``retention_seconds``,
-    because an in-flight compact/rebuild looks identical to an abort
-    orphan.  Rewrites HISTORY to the kept entries and returns the
-    deleted root paths."""
-    import os
-    import shutil
-    import time
-
-    try:
-        current = os.path.abspath(current_term_index(base))
-    except FileNotFoundError:
-        current = None
-    hist = term_index_history(base)
-    keep_roots = set(hist[-max(keep, 1):])
-    if current:
-        keep_roots.add(current)
-    removed: list[str] = []
-    for r in hist:
-        if r not in keep_roots and os.path.isdir(r):
-            shutil.rmtree(r, ignore_errors=True)
-            removed.append(r)
-    now = time.time()
-    known = set(hist) | keep_roots
-    for name in sorted(os.listdir(base)):
-        p = os.path.abspath(os.path.join(base, name))
-        if not os.path.isdir(p) or p in known:
-            continue
-        if not _looks_like_term_index(p):
-            continue  # not an index root — never touch
-        try:
-            if now - os.path.getmtime(p) < retention_seconds:
-                continue  # possibly an in-flight rebuild
-        except OSError:
-            continue
-        shutil.rmtree(p, ignore_errors=True)
-        removed.append(p)
-    kept = [r for r in hist if r in keep_roots]
-    with open(os.path.join(base, _HISTORY_FILE), "w") as f:
-        f.writelines(r + "\n" for r in kept)
-    return removed
+    """Reclaim superseded and aged orphan term-index roots under
+    ``base`` (lake.vacuum_roots); returns the deleted root paths."""
+    return vacuum_roots(
+        base, _looks_like_term_index, keep, retention_seconds
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1781,9 +1609,8 @@ def compact_term_index(
 # that predate the markers (or never carry norms — the pure lookup
 # family) have no postings.json and pass the gate unchanged.
 #
-# Marker writes are write-tmp + os.replace (the publish_term_index
-# pointer discipline: readers resolve either the old or the new
-# marker, never a partial file).  Single-writer maintenance is the
+# Marker writes are lake.write_replace (readers resolve either the
+# old or the new marker, never a partial file).  Single-writer maintenance is the
 # assumed regime, exactly as for append_term_index itself (disjoint
 # doc-id ranges = one ingestion pipeline).
 #
@@ -1821,13 +1648,9 @@ def read_maint_seq(path: str, name: str) -> int | None:
 def _write_maint_seq(path: str, name: str, seq: int) -> None:
     import json
     import os
-    import uuid
 
     os.makedirs(os.path.join(path, _MAINT_DIR), exist_ok=True)
-    tmp = os.path.join(path, _MAINT_DIR, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump({"seq": seq}, f)
-    os.replace(tmp, _maint_marker_path(path, name))
+    write_replace(_maint_marker_path(path, name), json.dumps({"seq": seq}))
 
 
 class IndexConflict(RuntimeError):
@@ -1835,13 +1658,13 @@ class IndexConflict(RuntimeError):
     postings sequence this writer tried to advance to.  Retryable: the
     loser re-reads the index state and re-derives its delta against
     the new base — exactly the lake's LakeConflict / the rollup's
-    base_version discipline (r11), brought to index maintenance."""
+    base_version discipline, brought to index maintenance."""
 
 
 def _begin_maint_txn(path: str) -> int:
-    """Open the maintenance transaction targeting seq base+1 via an
-    os.link CAS on ``_maint/txn-<base+1>.lock`` (the lake's manifest
-    hard-link discipline).  Two writers reading the same base race for
+    """Open the maintenance transaction targeting seq base+1 via a
+    lake.write_new CAS on ``_maint/txn-<base+1>.lock`` (the lake's
+    manifest discipline).  Two writers reading the same base race for
     one link; the loser raises IndexConflict BEFORE writing anything —
     index data files are directory-visible the moment they land, so
     conflicts must be detected at transaction START, not publish time.
@@ -1858,11 +1681,8 @@ def _begin_maint_txn(path: str) -> int:
     base = read_maint_seq(path, "postings") or 0
     os.makedirs(os.path.join(path, _MAINT_DIR), exist_ok=True)
     lock = os.path.join(path, _MAINT_DIR, f"txn-{base + 1}.lock")
-    tmp = os.path.join(path, _MAINT_DIR, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        f.write(uuid.uuid4().hex)
     try:
-        os.link(tmp, lock)
+        write_new(lock, uuid.uuid4().hex)
     except FileExistsError:
         raise IndexConflict(
             f"postings seq {base + 1} under {path} is owned by another "
@@ -1870,8 +1690,6 @@ def _begin_maint_txn(path: str) -> int:
             f"{lock}); re-read the index state and retry against the "
             "new base"
         ) from None
-    finally:
-        os.unlink(tmp)
     return base
 
 

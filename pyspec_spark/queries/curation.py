@@ -2160,14 +2160,14 @@ def train_mix_epoch(
 
 
 # ---------------------------------------------------------------------------
-# L46d lake composition (r13): the mix as a MAINTAINED ARTIFACT of the
+# L46d lake composition: the mix as a MAINTAINED ARTIFACT of the
 # corpus lake.  q_train_mix_delta proves the delta semantics against a
 # modulo split; in production the delta is whatever COMMITS landed on
 # the snapshot lake, detected by the lake's own CDC (S6c lake_diff) —
 # these two faces wire them together, with a version marker making the
 # mix a resumable artifact: _mix_version.json records which lake
 # version the materialized order covers, extend advances it
-# exactly-once (os.replace), and anything but pure inserts refuses
+# exactly-once (lake.write_replace), and anything but pure inserts refuses
 # LOUDLY (a mutated or deleted history doc cannot be patched into an
 # already-consumed order — that is a new mix lineage, the same
 # rebuild-vs-extend decision q_mix_alloc_drift informs).
@@ -2189,13 +2189,11 @@ def _read_mix_marker(path: str) -> dict | None:
 def _write_mix_marker(path: str, payload: dict) -> None:
     import json as _json
     import os as _os
-    import uuid as _uuid
+
+    from pyspec_spark.lake import write_replace
 
     _os.makedirs(path, exist_ok=True)
-    tmp = _os.path.join(path, f".tmp-{_uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        _json.dump(payload, f)
-    _os.replace(tmp, _os.path.join(path, _MIX_MARKER))
+    write_replace(_os.path.join(path, _MIX_MARKER), _json.dumps(payload))
 
 
 def _lake_corpus(spark: SparkSession, root: str, version: int) -> DataFrame:
@@ -2263,7 +2261,7 @@ def extend_mix_from_lake(
     not moved).  The drift report for the operator's rebuild-or-extend
     call is _alloc_micro_over at the two versions — the
     q_mix_alloc_drift shape over lake snapshots."""
-    from pyspec_spark.lake import lake_diff, latest_version
+    from pyspec_spark.lake import lake_diff, latest_version, write_new
     from pyspec_spark.operators.ordering import (
         extend_train_shards,
         global_order_index,
@@ -2294,19 +2292,14 @@ def extend_mix_from_lake(
     import uuid as _uuid
 
     lock = _os.path.join(path, f".mix-txn-v{v_to}.lock")
-    tmp = _os.path.join(path, f".tmp-{_uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        f.write(_uuid.uuid4().hex)
     try:
-        _os.link(tmp, lock)
+        write_new(lock, _uuid.uuid4().hex)
     except FileExistsError:
         raise ValueError(
             f"mix extension to lake version {v_to} under {path} is "
             f"owned by another extender (or a crashed one — see "
             f"{lock}); retry after it publishes or repair"
         ) from None
-    finally:
-        _os.unlink(tmp)
 
     try:
         return _extend_mix_locked(spark, root, path, m, v_from, v_to)

@@ -43,6 +43,14 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspec_spark.lake import (
+    current_root,
+    publish_root,
+    root_history,
+    vacuum_roots,
+    write_new,
+)
+
 _CENTROIDS_FILE = "centroids.json"
 
 
@@ -153,20 +161,25 @@ def save_centroids(root: str, cents) -> None:
     stale layout; re-training means a new index root."""
     rows = _codebook_rows(cents)
     payload = {"cids": [c for c, _ in rows], "c": [v for _, v in rows]}
-    path = os.path.join(root, _CENTROIDS_FILE)
-    if os.path.exists(path):
+    if _write_once(os.path.join(root, _CENTROIDS_FILE), payload):
+        raise ValueError(
+            f"index root {root} was built with a different codebook; "
+            "re-training requires a NEW index root (frozen-centroid "
+            "contract)"
+        )
+
+
+def _write_once(path: str, payload: dict) -> bool:
+    """Publish a write-once metadata file with write_new; True when
+    the path already holds a DIFFERENT payload (the caller raises).  A
+    crash mid-write leaves only a temp file, never truncated JSON."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    try:
+        write_new(path, json.dumps(payload))
+        return False
+    except FileExistsError:
         with open(path) as f:
-            existing = json.load(f)
-        if existing != payload:
-            raise ValueError(
-                f"index root {root} was built with a different codebook; "
-                "re-training requires a NEW index root (frozen-centroid "
-                "contract)"
-            )
-        return
-    os.makedirs(root, exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(payload, f)
+            return json.load(f) != payload
 
 
 def load_centroids(root: str) -> tuple[list[int], np.ndarray]:
@@ -330,44 +343,33 @@ def delete_vectors(
 
 
 # ---------------------------------------------------------------------------
-# Re-train + atomic swap (r8) — the other half of the frozen-codebook
+# Re-train + atomic swap — the other half of the frozen-codebook
 # contract the module docstring prescribes: assignment drift from a
 # moving codebook silently invalidates every written cell, so
-# re-training builds a NEW index root and PUBLISHES it atomically.
+# re-training builds a NEW index root and PUBLISHES it through the
+# CURRENT-pointer lifecycle in lake.py (publish_root and siblings; a
+# root is any directory holding a codebook).
 # ---------------------------------------------------------------------------
-_POINTER_FILE = "CURRENT"
-
-
-_HISTORY_FILE = "HISTORY"
+def _is_vector_root(root: str) -> bool:
+    return os.path.exists(os.path.join(root, _CENTROIDS_FILE))
 
 
 def publish_index(base: str, root: str) -> None:
-    """Atomically point base/CURRENT at a built index root (write-tmp +
-    os.replace — one rename syscall, so a concurrent reader sees either
-    the old root or the new one, never a partial pointer).  The root
-    must already hold a codebook and at least one committed version.
-
-    Each publish is also appended to base/HISTORY (after the pointer
-    swap — CURRENT stays authoritative if the append is lost to a
-    crash), giving vacuum_indexes an ordered record of superseded
-    roots to reclaim."""
-    import uuid as _uuid
-
-    if not os.path.exists(os.path.join(root, _CENTROIDS_FILE)):
-        raise ValueError(f"{root} has no codebook — build before publish")
-    os.makedirs(base, exist_ok=True)
-    tmp = os.path.join(base, f".tmp-{_uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        f.write(os.path.abspath(root))
-    os.replace(tmp, os.path.join(base, _POINTER_FILE))
-    with open(os.path.join(base, _HISTORY_FILE), "a") as f:
-        f.write(os.path.abspath(root) + "\n")
+    """Atomically point base/CURRENT at a built index root (which must
+    hold a codebook) and append it to base/HISTORY."""
+    publish_root(base, root, _is_vector_root, "codebook-bearing index")
 
 
-def current_index(base: str) -> str:
-    """Resolve the published index root."""
-    with open(os.path.join(base, _POINTER_FILE)) as f:
-        return f.read().strip()
+current_index = current_root
+index_history = root_history
+
+
+def vacuum_indexes(
+    base: str, keep: int = 1, retention_seconds: float = 3600.0
+) -> list[str]:
+    """Reclaim superseded and aged orphan index roots under ``base``
+    (lake.vacuum_roots); returns the deleted root paths."""
+    return vacuum_roots(base, _is_vector_root, keep, retention_seconds)
 
 
 def reindex(
@@ -393,83 +395,6 @@ def reindex(
     vecs = lake_read(spark, old_root).select("vec_id", "embedding")
     assigned = assign_cells(vecs, codebook)
     return lake_append(spark, new_root, assigned, partition_col="cid")
-
-
-def index_history(base: str) -> list[str]:
-    """Ordered distinct publish history (oldest first, last occurrence
-    wins the position — re-publishing an old root moves it to newest)."""
-    path = os.path.join(base, _HISTORY_FILE)
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        raw = [ln.strip() for ln in f if ln.strip()]
-    out: list[str] = []
-    for r in raw:
-        if r in out:
-            out.remove(r)
-        out.append(r)
-    return out
-
-
-def vacuum_indexes(
-    base: str, keep: int = 1, retention_seconds: float = 3600.0
-) -> list[str]:
-    """Index-lifecycle GC (r9 — the other end of reindex + atomic
-    publish, which otherwise accumulates old roots forever).  Deletes:
-
-    - **superseded roots**: publish-history entries older than the
-      newest ``keep`` — committed history, reclaimed regardless of age
-      (the lake_vacuum expired-manifest rule).  The CURRENT root is
-      never deleted, whatever ``keep`` says.
-    - **orphan roots**: directories under ``base/`` that hold a
-      codebook but were never published — but only when older than
-      ``retention_seconds``: a root a CONCURRENT rebuild is still
-      writing looks identical to an abort-orphan, and deleting it
-      would break the builder's upcoming publish (the same
-      vacuum-retention discipline as lake_vacuum's staged-file rule).
-
-    Readers that re-resolve base/CURRENT per query are never affected;
-    a reader still holding a superseded root's path fails LOUDLY on
-    its next scan (missing files), never silently — the retention
-    contract is that readers re-resolve at least every
-    ``retention_seconds``.  Rewrites HISTORY to the kept entries and
-    returns the deleted root paths."""
-    import shutil
-    import time
-
-    try:
-        current = os.path.abspath(current_index(base))
-    except FileNotFoundError:
-        current = None
-    hist = index_history(base)
-    keep_roots = set(hist[-max(keep, 1):])
-    if current:
-        keep_roots.add(current)
-    removed: list[str] = []
-    for r in hist:
-        if r not in keep_roots and os.path.isdir(r):
-            shutil.rmtree(r, ignore_errors=True)
-            removed.append(r)
-    # orphans under base: codebook-bearing dirs never published
-    now = time.time()
-    known = set(hist) | keep_roots
-    for name in sorted(os.listdir(base)):
-        p = os.path.abspath(os.path.join(base, name))
-        if not os.path.isdir(p) or p in known:
-            continue
-        if not os.path.exists(os.path.join(p, _CENTROIDS_FILE)):
-            continue  # not an index root — never touch
-        try:
-            if now - os.path.getmtime(p) < retention_seconds:
-                continue  # possibly an in-flight rebuild
-        except OSError:
-            continue
-        shutil.rmtree(p, ignore_errors=True)
-        removed.append(p)
-    kept = [r for r in hist if r in keep_roots]
-    with open(os.path.join(base, _HISTORY_FILE), "w") as f:
-        f.writelines(r + "\n" for r in kept)
-    return removed
 
 
 # ---------------------------------------------------------------------------
@@ -515,20 +440,12 @@ def save_pq_codebooks(root: str, m: int, subd: int, cb) -> None:
         "subd": int(subd),
         "cb": [[[float(x) for x in w] for w in sub] for sub in cb],
     }
-    path = os.path.join(root, _PQ_FILE)
-    if os.path.exists(path):
-        with open(path) as f:
-            existing = json.load(f)
-        if existing != payload:
-            raise ValueError(
-                f"index root {root} was built with different PQ "
-                "codebooks; re-training requires a NEW index root "
-                "(frozen-codebook contract)"
-            )
-        return
-    os.makedirs(root, exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(payload, f)
+    if _write_once(os.path.join(root, _PQ_FILE), payload):
+        raise ValueError(
+            f"index root {root} was built with different PQ "
+            "codebooks; re-training requires a NEW index root "
+            "(frozen-codebook contract)"
+        )
 
 
 def load_pq_codebooks(root: str) -> tuple[int, int, list]:

@@ -83,26 +83,50 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def input_bytes(df: DataFrame) -> int | None:
+    """Driver-side, job-free size estimate: the sum of the frame's
+    local input file sizes.  None means "big" — callers must take
+    their non-broadcast / no-op arm — when any input is remote, when
+    the frame lists no input files at all (createDataFrame, cached or
+    otherwise in-memory inputs, whose size the file list cannot
+    bound), or when the estimate fails."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    try:
+        uris = df.inputFiles()
+        if not uris:
+            return None
+        total = 0
+        for uri in uris:
+            p = urlparse(uri)
+            if p.scheme not in ("file", ""):
+                return None
+            total += os.path.getsize(unquote(p.path))
+        return total
+    except Exception:
+        return None
+
+
 def fanout(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-repartition a scan-rooted frame BEFORE an expensive map
     stage, only when the scan cannot feed every core.
 
-    The r13 cold-path measurements traced most of the heavy corpus
-    queries' re-execution cost to one place: the test corpus is a
-    single sub-MB parquet file — ONE input split — so everything up to
-    the first exchange (shingle builds + 64 per-shingle md5 partials,
-    trigram/gram explodes, tokenize+aggregate passes) ran on one core
-    while 31 idled.  Fanning the raw rows out first costs one exchange
-    of the tiny input and lets the expensive stage behind it use the
-    whole machine (measured: q_ngram_freq cold re-exec 3.7 -> 1.6 s).
+    The test corpus is a single sub-MB parquet file — ONE input split —
+    so everything up to the first exchange (shingle builds + 64
+    per-shingle md5 partials, trigram/gram explodes, tokenize+aggregate
+    passes) would run on one core while the rest idle.  Fanning the raw
+    rows out first costs one exchange of the tiny input and lets the
+    expensive stage behind it use the whole machine (measured:
+    q_ngram_freq cold re-exec 3.7 -> 1.6 s).
 
     Scale posture (guide §2: derive partitioning from the input, never
     a constant): at real scale the scan already yields >= cores input
     splits and this exchange would be pure overhead — so the helper
-    NO-OPS unless the frame's estimated split count is below the
-    session's parallelism.  Splits are estimated driver-side from the
-    frame's input files and spark.sql.files.maxPartitionBytes, the
-    same quantities Spark's own FilePartition packing uses.
+    NO-OPS unless the frame's estimated split count (``input_bytes``
+    over spark.sql.files.maxPartitionBytes) is below the session's
+    parallelism.  A frame whose size cannot be estimated is left as
+    it is.
 
     Hash partitioning on a row key (never round-robin, which inserts a
     per-partition sort and, on retry, a full local materialization) is
@@ -112,27 +136,21 @@ def fanout(df: DataFrame, *keys: str) -> DataFrame:
     either way.
     """
     import math
-    import os
-    from urllib.parse import urlparse
+
+    from pyspark.sql import functions as F
 
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
+    nbytes = input_bytes(df)
+    if nbytes is None:
+        return df
+    mpb_raw = spark.conf.get(
+        "spark.sql.files.maxPartitionBytes", "134217728b"
+    )
     try:
-        mpb_raw = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728b"
-        )
         mpb = int(str(mpb_raw).lower().rstrip("b")) or 1
-        splits = 0
-        for uri in df.inputFiles():
-            p = urlparse(uri)
-            path = p.path if p.scheme in ("file", "") else None
-            if path is None:
-                return df  # remote store: real layouts, never starved
-            splits += max(1, math.ceil(os.path.getsize(path) / mpb))
-            if splits >= par:
-                return df
-    except Exception:
-        return df  # estimation failed: keep the plan untouched
-    from pyspark.sql import functions as F
-
+    except ValueError:
+        return df  # unit-suffixed setting: keep the plan untouched
+    if math.ceil(nbytes / mpb) >= par:
+        return df
     return df.repartition(par, *[F.col(k) for k in keys])

@@ -1889,3 +1889,150 @@ def test_restore_preserves_schema_era(spark, tmp_path):
     lake_restore(root, version=1)
     cols = lake_read(spark, root).columns
     assert "text" in cols and "body" not in cols
+
+
+# ---------------------------------------------------------------------------
+# The publish primitives (Spark-free: plain files, milliseconds).
+# ---------------------------------------------------------------------------
+def _no_tmp_left(d):
+    return not [n for n in os.listdir(d) if n.startswith(".tmp-")]
+
+
+def test_write_new_refuses_existing_target(tmp_path):
+    from pyspec_spark.lake import write_new
+
+    p = str(tmp_path / "v.json")
+    write_new(p, "first")
+    with pytest.raises(FileExistsError):
+        write_new(p, "second")
+    assert open(p).read() == "first"
+    assert _no_tmp_left(tmp_path)
+
+
+def test_write_replace_overwrites(tmp_path):
+    from pyspec_spark.lake import write_replace
+
+    p = str(tmp_path / "CURRENT")
+    write_replace(p, "old")
+    write_replace(p, "new")
+    assert open(p).read() == "new"
+    assert _no_tmp_left(tmp_path)
+
+
+def test_racing_writers_one_cas_winner_and_whole_replaces(tmp_path):
+    """Sixteen threads race on one name: exactly one write_new wins and
+    the target keeps its bytes; concurrent write_replace calls never
+    fail (each has its own temp file) and leave one writer's whole
+    payload."""
+    import sys
+    import threading
+
+    from pyspec_spark.lake import write_new, write_replace
+
+    new_p, rep_p = str(tmp_path / "lock"), str(tmp_path / "marker.json")
+    wins, errors = [], []
+    barrier = threading.Barrier(16)
+
+    def worker(i):
+        barrier.wait()
+        try:
+            write_new(new_p, f"owner-{i}")
+            wins.append(i)
+        except FileExistsError:
+            pass
+        try:
+            write_replace(rep_p, f"payload-{i}" * 100)
+        except Exception as e:  # any failure is the bug under test
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(wins) == 1 and open(new_p).read() == f"owner-{wins[0]}"
+    assert not errors
+    body = open(rep_p).read()
+    assert body in {f"payload-{i}" * 100 for i in range(16)}
+    assert _no_tmp_left(tmp_path)
+
+
+def test_commit_conflict_is_a_failed_write_new(tmp_path):
+    """_commit's LakeConflict is write_new's FileExistsError: the loser
+    leaves the winner's manifest byte-identical and no temp file."""
+    from pyspec_spark.lake import _commit, _manifest_path
+
+    root = str(tmp_path / "t")
+    assert _commit(root, "append", [], None, None) == 1
+    won = open(_manifest_path(root, 1)).read()
+    with pytest.raises(LakeConflict):
+        _commit(root, "append", [], None, None)
+    assert open(_manifest_path(root, 1)).read() == won
+    assert _no_tmp_left(os.path.dirname(_manifest_path(root, 1)))
+
+
+def test_lake_tag_is_a_cas_unless_replace(tmp_path):
+    from pyspec_spark.lake import _commit, lake_tag, resolve_tag
+
+    root = str(tmp_path / "t")
+    _commit(root, "append", [], None, None)
+    _commit(root, "append", [], None, 1)
+    assert lake_tag(root, "rel", version=1) == 1
+    with pytest.raises(FileExistsError, match="v1"):
+        lake_tag(root, "rel", version=2)
+    assert resolve_tag(root, "rel") == 1
+    lake_tag(root, "rel", version=2, replace=True)
+    assert resolve_tag(root, "rel") == 2
+    assert _no_tmp_left(os.path.join(root, "_tags"))
+
+
+def test_save_centroids_is_write_once(tmp_path):
+    from pyspec_spark.streaming.vectors import load_centroids, save_centroids
+
+    root = str(tmp_path / "idx")
+    cents = [(0, [0.0, 1.0]), (1, [2.0, 3.0])]
+    save_centroids(root, cents)
+    save_centroids(root, cents)  # same codebook: a restart, accepted
+    with pytest.raises(ValueError, match="different codebook"):
+        save_centroids(root, [(0, [0.0, 1.5]), (1, [2.0, 3.0])])
+    assert load_centroids(root)[0] == [0, 1]
+    assert _no_tmp_left(root)
+
+
+def test_atomic_publish_lives_only_in_lake_primitives():
+    """os.replace( / os.link( appear in the package only inside
+    lake.write_new and lake.write_replace: every other module publishes
+    through them, so a hand-rolled publish cannot come back."""
+    import ast
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pyspec_spark",
+    )
+    lake_py = os.path.join(pkg, "lake.py")
+    tree = ast.parse(open(lake_py).read())
+    allowed = {
+        (lake_py, ln)
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+        and node.name in ("write_new", "write_replace")
+        for ln in range(node.lineno, node.end_lineno + 1)
+    }
+    hits = []
+    for dirpath, _, names in os.walk(pkg):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            for ln, line in enumerate(open(path), 1):
+                if re.search(r"os\.(replace|link)\(", line):
+                    hits.append((path, ln))
+    assert len(hits) == 2
+    assert set(hits) <= allowed, sorted(set(hits) - allowed)

@@ -1232,3 +1232,43 @@ def test_ann_filtered_pushes_predicate_and_takeordered(spark):
     assert any("label" in f for f in pushed_filters(p)), p[:2000]
     assert has_broadcast_join(p)
     assert has_take_ordered(p)
+
+
+def test_minhash_hash_table_arm_follows_input_size(spark):
+    """The minhash join arm comes from tables.input_bytes.  A small
+    file input broadcasts the distinct-shingle hash table; an input the
+    file list cannot size (createDataFrame lists no files) takes the
+    fail-safe SHUFFLE_HASH arm, never an unbounded broadcast.
+    Plan-only: no job runs."""
+    from pyspec_spark.operators.dedup import minhash_signatures
+    from pyspec_spark.tables import input_bytes
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    assert input_bytes(docs) is None
+    p = physical_plan(minhash_signatures(docs, n_hashes=4))
+    assert "ShuffledHashJoin" in p and "BroadcastHashJoin" not in p
+    assert "BroadcastHashJoin" in _plan(spark, "q_minhash_neardup")
+
+
+def test_input_bytes_sizes_local_files_only(tmp_path):
+    """Spark-free: percent-encoded local URIs are unquoted and summed;
+    a remote input or an empty file list reads as None ("big")."""
+    from urllib.parse import quote
+
+    from pyspec_spark.tables import input_bytes
+
+    class _Frame:
+        def __init__(self, uris):
+            self._uris = uris
+
+        def inputFiles(self):
+            return self._uris
+
+    f = tmp_path / "part 0%.parquet"
+    f.write_bytes(b"x" * 10)
+    uri = "file://" + quote(str(f))
+    assert input_bytes(_Frame([uri, uri])) == 20
+    assert input_bytes(_Frame([uri, "s3a://bucket/key.parquet"])) is None
+    assert input_bytes(_Frame([])) is None
