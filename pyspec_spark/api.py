@@ -13,18 +13,16 @@ The reference idioms and their equivalents here:
     setMode('bin')                      sf[[...]].binned()
     sf.reload()                         sf.reload()
 
-Everything returns DataFrames (lazy plans over the `specfile`
-DataSource) except the O(1) per-scan metadata lookup, which collects
-one row.  `sf[n]` reads with the DataSource's `scans` option, which
-prunes to that scan's partitions — the distributed equivalent of the
-reference's byte-offset seek.
+Everything returns DataFrames (lazy plans of built-in expressions over
+the files' text, `read_spec`) except the per-scan metadata lookup,
+which collects one row.  `sf[n]` keeps only scan n's blocks before
+their lines are parsed: the equivalent of the reference's byte-offset
+seek.
 
-A handle is a snapshot of its files' scan index, as in pyspec: it
-memoizes one loaded frame per (table, scans) and one SpecScanFrame per
-scan selection.  Each frame indexes the files the first time it runs,
-and Spark reuses that planned read for every later query over it, so
-repeating `sf[n].wide()` makes no Python planner call.  Scans appended
-after that are seen through `sf.reload()`.
+A handle is a snapshot of its files, as in pyspec: it memoizes one
+loaded frame per (table, scans) and one SpecScanFrame per scan
+selection, and each frame reads the bytes its files held when it was
+loaded.  Scans appended after that are seen through `sf.reload()`.
 """
 
 from __future__ import annotations
@@ -106,8 +104,8 @@ class SpecScanFrame:
     def __getattr__(self, name: str) -> DataFrame:
         """`scan.Detector` attribute access — like the reference API,
         an unknown counter RAISES instead of silently yielding an
-        all-null column (round-3 ADVICE: scan.Detecotr should be an
-        error, not an empty result).  Costs one memoized metadata
+        all-null column (a typo such as scan.Detecotr is an error, not
+        an empty result).  Costs one memoized metadata
         lookup; use `.col(name)` to bypass the check for dynamic
         counters known to exist only in some member scans."""
         if name.startswith("_") or name in ("df", "scan_numbers"):
@@ -149,7 +147,7 @@ class SpecScanFrame:
         width: int = 480,
         height: int = 320,
     ) -> bytes:
-        """SpecPlot analog (SURVEY §2 S6, r6): PNG bytes of ``counter``
+        """SpecPlot analog (SURVEY §2 S6): PNG bytes of ``counter``
         vs the scan's first `#L` column (the scanned motor, the
         reference's default x) or an explicit ``x``, with Poisson error
         bars; ``monitor=`` normalizes y and its error first (the
@@ -180,10 +178,10 @@ class SpecScanFrame:
 
 
 class SpecDataFile:
-    """Open one or more SPEC files through the `specfile` DataSource.
+    """Open one or more SPEC files.
 
     `path` accepts a file, a directory, a glob, or a comma-separated
-    list (the DataSource's path option)."""
+    list (`read_spec`'s path)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark

@@ -369,7 +369,7 @@ def _stage_files(
     """Write df as immutable files under a fresh commit dir; return the
     manifest file entries (relative path + partition value string).
 
-    ``cluster_col`` (r12) is the SECOND at-rest key: the write splits
+    ``cluster_col`` is the SECOND at-rest key: the write splits
     each partition's files one-per-cluster-value (a second hive level
     the manifest does NOT treat as the partition), so every data file
     holds exactly one cluster value and its footer [min, max] on that
@@ -502,10 +502,18 @@ def _bloom_probes(data: bytes, m: int) -> list[int]:
 def _file_blooms(path: str, cols: list[str]) -> dict:
     """Build {col: {"m": bits, "b64": ...}} from a parquet file's actual
     values (one columnar read per requested column — a write-time cost
-    the caller opted into, unlike the free footer stats)."""
+    the caller opted into, unlike the free footer stats).
+
+    Vectorized form of ``_bloom_probes`` over the distinct values:
+    ``(h1 % m + i * (h2 % m)) % m`` equals ``(h1 + i * h2) % m``, so the
+    bits are identical to probing each value in turn."""
     import base64
+    import hashlib
 
     try:
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
     except Exception:
         return {}
@@ -516,18 +524,31 @@ def _file_blooms(path: str, cols: list[str]) -> dict:
         # must not kill the blooms of the columns that DO exist —
         # pq.read_table raises on any missing name in the batch form
         try:
-            vals = set(pq.read_table(path, columns=[c]).column(c).to_pylist())
+            col = pq.read_table(path, columns=[c]).column(c)
         except Exception:
             continue
-        canon = [b for b in (_bloom_canon(v) for v in vals) if b is not None]
-        if not canon:
+        if pa.types.is_dictionary(col.type):
+            col = col.cast(col.type.value_type)
+        t = col.type
+        if pa.types.is_integer(t):
+            tag = b"i"
+        elif pa.types.is_string(t) or pa.types.is_large_string(t):
+            tag = b"s"
+        else:
+            continue  # _bloom_canon refuses every other type
+        vals = pc.unique(col).drop_null().cast(pa.string()).to_pylist()
+        if not vals:
             continue
-        m = min(_BLOOM_MAX_BITS, max(64, 10 * len(canon)))
-        bits = bytearray((m + 7) // 8)
-        for b in canon:
-            for idx in _bloom_probes(b, m):
-                bits[idx >> 3] |= 1 << (idx & 7)
-        out[c] = {"m": m, "b64": base64.b64encode(bytes(bits)).decode()}
+        m = min(_BLOOM_MAX_BITS, max(64, 10 * len(vals)))
+        d = np.frombuffer(
+            b"".join(hashlib.md5(tag + v.encode()).digest() for v in vals), "<u8"
+        ).reshape(-1, 2)
+        h1, h2 = d[:, 0] % m, (d[:, 1] | 1) % m
+        idx = (h1[:, None] + np.arange(_BLOOM_K, dtype=np.uint64) * h2[:, None]) % m
+        bits = np.zeros(m, bool)
+        bits[idx.ravel()] = True
+        packed = np.packbits(bits, bitorder="little").tobytes()
+        out[c] = {"m": m, "b64": base64.b64encode(packed).decode()}
     return out
 
 
@@ -565,7 +586,7 @@ def lake_append(
     version you captured at transaction start (None = table was empty)
     and the commit links parent=base, so an interleaved commit raises
     LakeConflict instead of silently serializing on a base you never
-    read.  ``cluster_col`` (r12) opts the new files into the second
+    read.  ``cluster_col`` opts the new files into the second
     at-rest key (one file per (partition, cluster) value — see
     _stage_files); once set it is a TABLE layout property: later
     appends and row-level rewrites preserve it without repeating it."""
@@ -647,7 +668,7 @@ def lake_read(
             f"version {v} references vacuumed files, e.g. {missing[0]}"
         )
     if m.get("columns"):
-        # column-mapped table (rename/retype, r11): project each
+        # column-mapped table (rename/retype): project each
         # schema era physical -> logical; this version's manifest holds
         # THIS version's mapping, so time travel is era-correct
         return _read_mapped(spark, root, m, m["files"])
@@ -750,7 +771,7 @@ def lake_upsert(
         else:
             m, touched, kept_entries = None, [], []
         if touched:
-            # mapped tables (rename/retype eras, r11): the touched
+            # mapped tables (rename/retype eras): the touched
             # files are read THROUGH the mapping (logical view) so the
             # survivors splice with logical updates; the rewrite then
             # stages back under physical names in the current era
@@ -839,7 +860,7 @@ def lake_replace_partitions(
             "files — use lake_upsert (its survivors re-read covers them)"
         )
     if m.get("columns"):
-        # mapped table (r11): the caller's df is LOGICAL complete
+        # mapped table: the caller's df is LOGICAL complete
         # content — translate to physical names and stamp the era
         _p, new, columns, schemas = _stage_mapped_append(
             spark, root, m, df, partition_col, bloom_cols,
@@ -900,7 +921,7 @@ def lake_delete(
         touched, kept_entries = _split_touched(old, parts, m, partition_col)
         if not touched:
             return prev
-        # mapped tables (r11): survivors splice in the LOGICAL view and
+        # mapped tables: survivors splice in the LOGICAL view and
         # the rewrite stages back under physical names, current era
         tgt = (
             _read_mapped(spark, root, m, touched)
@@ -1198,7 +1219,7 @@ def lake_last_batch(root: str, query_name: str) -> int | None:
 
 def _translate_stream_batch(m: dict, df: DataFrame) -> DataFrame:
     """Re-aim a micro-batch written against a STALE logical schema at
-    the CURRENT column mapping (r12): a rename/retype commit landing
+    the CURRENT column mapping: a rename/retype commit landing
     between micro-batches must not silently fork the stream's data.
 
     - A batch column that is no longer a logical name but IS the
@@ -1267,14 +1288,14 @@ def lake_append_stream(
     re-checks the watermark each attempt so a racing replica of the
     same stream can't double-commit the batch either.
 
-    Mapped tables (r12): a schema-evolution commit (rename / widen-
-    retype, r11) landing between micro-batches is handled per batch —
+    Mapped tables: a schema-evolution commit (rename / widen-
+    retype) landing between micro-batches is handled per batch —
     the batch translates onto the CURRENT mapping
     (_translate_stream_batch), stages under physical names, and stamps
     the current era; a mapping that moves between staging and the
     commit retry re-stages against the new mapping.
 
-    ``cluster_col`` (r12): explicit value sets the clustered layout on
+    ``cluster_col``: explicit value sets the clustered layout on
     the table's FIRST commit (a streaming-built lake has no earlier
     manifest to inherit from); thereafter the manifest's recorded
     layout wins, exactly like lake_append."""
@@ -1463,7 +1484,7 @@ def lake_scan_in(
     where_in: list[tuple],
     version: int | None = None,
 ) -> DataFrame:
-    """Batched point-lookup scan (r13, the PQ re-rank fetch): read a
+    """Batched point-lookup scan (the PQ re-rank fetch): read a
     snapshot keeping only files that may hold ANY of each predicate's
     values.  ``where_in`` is a list of (column, values) pairs, ANDed
     across pairs, OR-semantics within a pair's value list — a file
@@ -1658,7 +1679,7 @@ def lake_diff(
 
     a = read_or_empty(v_from)
     b = read_or_empty(v_to)
-    # column-mapped versions (rename/retype, r11): align the FROM side
+    # column-mapped versions (rename/retype): align the FROM side
     # to the TO side's logical names and types BY COLUMN ID, so a pure
     # rename or a widen retype shows zero spurious changes — the whole
     # point of id indirection.  Only when both manifests carry
@@ -1735,7 +1756,7 @@ def lake_diff(
 
 # ---------------------------------------------------------------------------
 # Column-id mapping: RENAME and widen-RETYPE as metadata-only commits
-# (r11) — the Iceberg-style id indirection the add-column-only contract
+# — the Iceberg-style id indirection the add-column-only contract
 # lacked.  Every logical column gets a stable id and a FIXED physical
 # name (the name it was first written under — renames never rewrite
 # data); the manifest records the mapping plus a per-file schema ERA

@@ -86,13 +86,12 @@ def q_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# S1b — SPEC DataSource under the oracle gate (r7): the custom Spark 4
-# Python DataSource (sources/spec_datasource.py), previously unit-only,
-# made driver-checkable: synthesize a SPEC text file FROM the documents
-# table (one scan, integer motor columns doc_id / n_chars — integers
-# survive the %g text round-trip exactly, which is why no float column
-# rides along), read it back through the registered "specfile" format's
-# per-scan partitions and values map, and return the parsed columns.
+# S1b — SPEC batch reads under the oracle gate: synthesize a SPEC text
+# file FROM the documents table (one scan, integer motor columns doc_id /
+# n_chars — integers survive the %g text round-trip exactly, which is why
+# no float column rides along), read it back through read_spec
+# (sources/spec_datasource.py) and its values map, and return the parsed
+# columns.
 # The oracle selects the same slice straight from the table: any parser
 # offset error, column mix-up, or map-key defect flips the value hash.
 # Bounded side effect (one tmp file per invocation); exempt from the
@@ -150,9 +149,9 @@ def q_spec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(tmp, "roundtrip.spec")
     with open(path, "w") as f:
         f.write("\n".join(lines))
-    # The specfile reader prunes by its `scans` option and accepts no
-    # pushed filters, so this read works whatever the session's Python
-    # filter-pushdown conf (a filter-accepting reader fails when it is off).
+    # read_spec is a plan of built-in expressions over the file's text:
+    # no Python data source, so no session conf (such as Python filter
+    # pushdown) changes how it reads.
     pts = read_spec(spark, path)
     return pts.select(
         F.col("values")["doc_id"].alias("doc_id_v"),

@@ -1,18 +1,21 @@
-"""SPEC file Python DataSource (Spark 4 DataSource API) — SURVEY.md §2
-S1/S2, §4.3 item 1.
+"""SPEC files as two Spark tables — SURVEY.md §2 S1/S2, §4.3 item 1.
 
-The reference's only optimization is its scan index: `pyspec/spec.py`
-`SpecDataFile.index()` records each scan's byte offset so `sf[n]` parses
-one block.  Distributed translation: **one input partition per scan
-block**, and a `scans` read option that keeps only the listed scan
-numbers' partitions — the same byte-skipping, executor-side.
+Batch reads are a plan of built-in Spark expressions; no Python worker
+starts:
 
-Usage:
-    spark.dataSource.register(SpecDataSource)
-    pts   = spark.read.format("specfile").option("path", f).load()
-    scans = (spark.read.format("specfile").option("path", f)
-                  .option("table", "scans").load())
-    two   = read_spec(spark, f, scans=[3, 4])   # prunes to 2 blocks/file
+    pts   = read_spec(spark, f)                   # one row per data point
+    scans = read_spec(spark, f, "scans")          # one row per scan block
+    two   = read_spec(spark, f, scans=[3, 4])     # only those scans' blocks
+
+`spark.read.text(files, wholetext=True)` gives one row per file.  The
+text splits into scan blocks before every `#S <digit>` line (the
+boundary of `spec_format.index_scans`, pyspec's `SpecDataFile.index()`);
+a `scans` list filters the blocks by scan number before any of their
+lines is parsed, and the kept blocks are parsed by the rules of
+`spec_format.parse_scan_block`, written as Java regex and higher-order
+array functions.  `spec_format` stays the one Python parser: it serves
+the streaming reader below and the UDTF, and the tests use it as the
+oracle for this plan.
 
 Two logical tables (FIXTURES.md B1 schemas):
   points: file, scan_number, point_index, values MAP<STRING,DOUBLE>,
@@ -22,20 +25,23 @@ Two logical tables (FIXTURES.md B1 schemas):
           motors MAP<STRING,DOUBLE>, columns ARRAY<STRING>,
           n_points_declared INT, aborted BOOLEAN
 
-Pruning is by option, never by filter pushdown: Spark caches a loaded
-frame's planned read and reuses it for every query over that frame, so a
-reader whose partitions depended on the pushed predicates of the first
-query would answer later queries from the wrong blocks.  Partitions here
-are a pure function of the options.  A `scan_number` predicate on an
-unpruned frame is still correct; it filters rows after a full parse.
+The trade: one task per file, since wholetext never splits a file (the
+Python reader this replaced ran one task per scan block).  Many files
+spread over the cores; one file is one task and must stay under 2 GB.
+A loaded frame is a snapshot: its text is cut to the file size Spark
+listed at load, so scans appended later are seen by a new read (pyspec
+`reload`).  Where the parse differs from spec_format:
+  - names starting with `_` or `.` are skipped, as by every Spark file
+    source;
+  - numbers take ASCII digits only (Python's int() and float() also
+    take other Unicode digits);
+  - a value spec_format raises on (an MCA, `#G` or `#P` value that is
+    no float) is null here;
+  - a `#D` leap second (:60, :61) is a null timestamp; Python rolls it
+    over into the next minute.
 
-Scale notes: the driver-side index pass reads only `#S` line offsets
-(regex scan over bytes, no block parse).  Each executor task reads just
-the file header and its own [start, end) byte range.  At 100 TB (many
-files x many scans) the partition list is file-metadata-sized, and
-pruning keeps point queries O(one block).  A planned read is a snapshot
-of the scan index: appended scans (pyspec `reload`) are seen by a new
-load().
+`spark.readStream.format("specfile")` is the streaming source: it tails
+appended scans with the Python parser (SpecSimpleStreamReader).
 """
 
 from __future__ import annotations
@@ -45,12 +51,8 @@ import glob as globmod
 import os
 from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql import functions as F
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -92,16 +94,6 @@ SCANS_SCHEMA = StructType(
 )
 
 
-class _ScanPartition(InputPartition):
-    """One scan block: byte offsets of the header end and the block."""
-
-    def __init__(self, path: str, header_end: int, start: int, end: int):
-        self.path = path
-        self.header_end = header_end
-        self.start = start
-        self.end = end
-
-
 def _resolve_paths(path_opt: str) -> list[str]:
     paths: list[str] = []
     for p in path_opt.split(","):
@@ -119,8 +111,7 @@ def _scan_rows(
     table: str, path: str, motor_names: list[str], block: str
 ) -> Iterator[tuple]:
     """Parse one scan block's text into rows of the requested logical
-    table (shared by the batch partition reader and the streaming tail
-    reader)."""
+    table with spec_format (the streaming tail reader's rows)."""
     from pyspec_spark.sources.spec_format import parse_scan_block
 
     scan = parse_scan_block(block, motor_names)
@@ -128,7 +119,7 @@ def _scan_rows(
 
     if table == "scans":
         # tz-aware UTC pairs with parse_spec_date's timegm: the
-        # round-trip is host-timezone independent (ADVICE r1)
+        # round-trip is host-timezone independent
         ts = (
             datetime.datetime.fromtimestamp(scan.ts, tz=datetime.timezone.utc)
             if scan.ts is not None
@@ -155,61 +146,6 @@ def _scan_rows(
     for i, row in enumerate(scan.data):
         values = dict(zip(cols, row))
         yield (fname, scan.scan_number, i, values, scan.mca[i])
-
-
-class SpecDataSourceReader(DataSourceReader):
-    """Batch reader: one partition per scan block, pruned by the optional
-    ``scans`` option (comma-separated scan numbers).
-
-    The partition list depends on the options and the file bytes only,
-    so Spark may reuse one planned read for every query over a loaded
-    frame.  Offsets are bytes; every boundary falls just after a newline
-    or at the header's final newline, so decoding the header and one
-    block separately yields the same text as decoding the whole file."""
-
-    def __init__(self, options: dict, table: str):
-        self.table = table
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("specfile source requires .option('path', ...)")
-        scans = options.get("scans")
-        self._scan_filter: set[int] | None = (
-            None if scans is None else {int(s) for s in scans.split(",") if s.strip()}
-        )
-
-    # -- partition planning: the scan index, one partition per block -------
-    def partitions(self):
-        from pyspec_spark.sources.spec_format import header_end, index_scans
-
-        parts: list[_ScanPartition] = []
-        for path in _resolve_paths(self.path):
-            with open(path, "rb") as fh:
-                data = fh.read()
-            head = header_end(data)
-            for scan_number, start, end in index_scans(data):
-                if self._scan_filter is None or scan_number in self._scan_filter:
-                    parts.append(_ScanPartition(path, head, start, end))
-        if not parts:
-            # full pruning (no listed scan exists): Spark calls read(None)
-            # when the partition list is empty, so return one sentinel
-            # partition that yields nothing instead
-            return [_ScanPartition("", 0, 0, 0)]
-        return parts
-
-    # -- per-partition read: the header and ONE scan block ------------------
-    def read(self, partition: _ScanPartition) -> Iterator[tuple]:
-        from pyspec_spark.sources.spec_format import parse_file_header
-
-        if partition is None or not partition.path:  # pruned-empty sentinel
-            return
-        with open(partition.path, "rb") as fh:
-            head = fh.read(partition.header_end)
-            fh.seek(partition.start)
-            block = fh.read(partition.end - partition.start)
-        motor_names = parse_file_header(head.decode("utf-8", "replace")).motor_names
-        yield from _scan_rows(
-            self.table, partition.path, motor_names, block.decode("utf-8", "replace")
-        )
 
 
 class SpecSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -342,9 +278,8 @@ class SpecSimpleStreamReader(SimpleDataSourceStreamReader):
 
 
 class SpecDataSource(DataSource):
-    """spark.read.format("specfile") — SPEC scan files as DataFrames.
-    Also streamable: spark.readStream.format("specfile") tails appended
-    scans (SpecSimpleStreamReader)."""
+    """spark.readStream.format("specfile"): tails appended scans
+    (SpecSimpleStreamReader).  Batch reads go through ``read_spec``."""
 
     @classmethod
     def name(cls) -> str:
@@ -353,9 +288,6 @@ class SpecDataSource(DataSource):
     def schema(self):
         table = self.options.get("table", "points")
         return SCANS_SCHEMA if table == "scans" else POINTS_SCHEMA
-
-    def reader(self, schema) -> DataSourceReader:
-        return SpecDataSourceReader(self.options, self.options.get("table", "points"))
 
     def simpleStreamReader(self, schema):  # noqa: N802 (API name)
         return SpecSimpleStreamReader(
@@ -367,11 +299,238 @@ def register(spark) -> None:
     spark.dataSource.register(SpecDataSource)
 
 
+# -- batch reads: spec_format's parse as built-in expressions ---------------
+# Java regex for Python's str.splitlines() breaks and str.isspace() spaces
+_BREAKS = r"\n\x0b\x0c\x1c-\x1e\x85\u2028\u2029"
+_LB = rf"(?:\r\n|[\r{_BREAKS}])"
+_WS = r"[\s\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+_HWS = r"[\t \x1f\xa0\u1680\u2000-\u200a\u202f\u205f\u3000]"  # within a line
+_LINE = rf"[^\r{_BREAKS}]*"
+# One item per line, except that an `@A` line and the lines its trailing
+# backslashes continue are one item: parse_scan_block's MCA state machine.
+_ITEM = (
+    rf"(?:^|(?<=[{_BREAKS}])|(?<=\r)(?!\n))"
+    rf"(?:{_HWS}*@A(?:{_LINE}\\{_HWS}*{_LB})*{_LINE}|{_LINE})"
+)
+_D = r"\d(?:_?\d)*"  # int() and float() digits (ASCII only)
+_INT = rf"^[+-]?{_D}$"
+_FLOAT = (
+    rf"(?i)^[+-]?(?:(?:{_D}(?:\.(?:{_D})?)?|\.{_D})(?:e[+-]?{_D})?"
+    r"|inf(?:inity)?|nan)$"
+)
+# time.strptime's "%a %b %d %H:%M:%S %Y" and "%Y-%m-%d %H:%M:%S"
+_HMS = rf"(3[01]|[12]\d|0?[1-9]){_WS}+(2[0-3]|[01]?\d):([0-5]?\d):(6[01]|[0-5]?\d)"
+_CTIME = (
+    rf"(?i)^(?:mon|tue|wed|thu|fri|sat|sun){_WS}+"
+    rf"(jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec){_WS}+{_HMS}{_WS}+(\d{{4}})$"
+)
+_ISO = rf"^(\d{{4}})-(1[0-2]|0?[1-9])-{_HMS}$"
+_ASCAN = ("ascan", "dscan", "a2scan", "d2scan", "th2th")
+
+
+def _rec(**fields):
+    """A struct built inside a lambda, where aliases are dropped."""
+    return F.named_struct(*(x for k, c in fields.items() for x in (F.lit(k), c)))
+
+
+def _strip(s):
+    return F.regexp_replace(s, rf"^{_WS}+|{_WS}+$", "")
+
+
+def _tokens(s):  # str.split()
+    return F.filter(F.split(s, rf"{_WS}+"), lambda t: t != "")
+
+
+def _float(t):  # float(t), null where Python raises
+    return F.when(t.rlike(_FLOAT), F.translate(t, "_", "").try_cast("double"))
+
+
+def _floats(s):
+    return F.transform(_tokens(s), _float)
+
+
+def _rest(s):  # stripped[2:], the text after a two-character tag
+    return F.substring(s, 3, 1 << 30)
+
+
+def _last(arr, pred):
+    return F.try_element_at(F.filter(arr, pred), F.lit(-1))
+
+
+def _labels(s):  # spec_format.split_labels
+    s = _strip(s)
+    sep2 = F.filter(F.split(s, f"{_WS}{{2,}}"), lambda t: t != "")
+    return F.when(s.rlike(f"{_WS}{{2}}"), sep2).otherwise(_tokens(s))
+
+
+def _indexed(lines, tag, parse):
+    """`#O<i>`/`#P<i>` lines as a dict {i: values}, concatenated by i."""
+    ents = F.transform(
+        F.filter(lines, lambda s: s.rlike(rf"^{tag}\d+{_WS}")),
+        lambda s: _rec(
+            i=F.regexp_extract(s, rf"^{tag}(\d+)", 1).try_cast("int"),
+            v=parse(F.regexp_extract(s, rf"(?s)^{tag}\d+{_WS}(.*)", 1)),
+        ),
+    )
+
+    def replaced(e, j):  # a later line has the same index
+        return F.exists(F.slice(ents, j + 2, F.size(ents)), lambda o: o.i == e.i)
+
+    last = F.filter(ents, lambda e, j: ~replaced(e, j))
+    return F.flatten(F.transform(F.array_sort(last), lambda e: e.v))
+
+
+def _dict(keys, vals):
+    """dict(zip(keys, vals)): cut to the shorter; a repeated key keeps
+    its first position and its last value."""
+    n = F.least(F.size(keys), F.size(vals))
+    k, v = F.slice(keys, 1, n), F.slice(vals, 1, n)
+    uk = F.array_distinct(k)
+
+    def last(x):
+        return F.element_at(v, (n + 1 - F.array_position(F.reverse(k), x)).cast("int"))
+
+    return F.map_from_arrays(
+        uk, F.when(F.size(uk) == n, v).otherwise(F.transform(uk, last))
+    )
+
+
+def _spec_date(s):  # spec_format.parse_spec_date, as a UTC timestamp
+    def parse(pat, to, fmt):
+        norm = F.concat(F.regexp_replace(s, pat, to), F.lit(" +0000"))
+        return F.when(s.rlike(pat), F.try_to_timestamp(norm, F.lit(fmt + " Z")))
+
+    return F.coalesce(
+        parse(_CTIME, "$1 $2 $3:$4:$5 $6", "MMM d H:m:s yyyy"),
+        parse(_ISO, "$1-$2-$3 $4:$5:$6", "y-M-d H:m:s"),
+    )
+
+
 def read_spec(spark, path: str, table: str = "points", scans=None):
-    """The front door for specfile reads: registers the source and, when
-    ``scans`` lists scan numbers, plans only those scans' blocks."""
-    register(spark)
-    r = spark.read.format("specfile").option("path", path).option("table", table)
+    """The batch front door: the ``points`` or ``scans`` table of the
+    SPEC files ``path`` names (a file, directory, glob or comma list).
+    ``scans`` keeps only the listed scan numbers' blocks, before any of
+    their lines is parsed."""
+    paths = _resolve_paths(path)
+    if not paths:
+        schema = SCANS_SCHEMA if table == "scans" else POINTS_SCHEMA
+        return spark.createDataFrame([], schema)
+    literal = ["".join("\\" + c if c in "{}[]*?\\" else c for c in p) for p in paths]
+    name = F.replace("_metadata.file_name", F.lit("+"), F.lit("%2B"))
+    # wholetext reads the live file: cut it to the size listed at load,
+    # so that a loaded frame stays a snapshot
+    size = "substring(cast(value as binary), 1, _metadata.file_size)"
+    files = spark.read.text(literal, wholetext=True).select(
+        F.url_decode(name).alias("file"),
+        F.expr(f"cast({size} as string)").alias("text"),
+    )
+    motors = []
+    if table == "scans":  # once per file, not once per block
+        header = F.split(F.substring_index("text", "\n#S ", 1), _LB)
+        files = files.select("*", _indexed(header, "#O", _labels).alias("motor_names"))
+        motors = ["motor_names"]
+    blocks = files.select(
+        "file", *motors, F.explode(F.split("text", r"\n(?=#S \d)")).alias("block")
+    ).where(F.col("block").rlike(r"^#S \d"))  # the header is no block
     if scans is not None:
-        r = r.option("scans", ",".join(str(n) for n in sorted(set(scans))))
-    return r.load()
+        num = F.regexp_extract("block", r"^#S (\d+)", 1).try_cast("int")
+        blocks = blocks.where(num.isin(sorted(set(scans))))
+    items = blocks.select(
+        "file", *motors, F.regexp_extract_all("block", F.lit(_ITEM), 0).alias("items")
+    )
+    head, s_line = F.try_element_at("items", F.lit(1)), rf"(?s)^#S{_WS}+(\d+){_WS}+(.*)"
+    bad = F.raise_error(F.concat(F.lit("not a scan block: "), F.substring(head, 1, 60)))
+    parsed = items.select(
+        "file",
+        *motors,
+        F.when(head.rlike(s_line), F.regexp_extract(head, s_line, 1).try_cast("int"))
+        .otherwise(bad)
+        .alias("scan_number"),
+        _strip(F.regexp_extract(head, s_line, 2)).alias("command"),
+        F.transform("items", _strip).alias("lines"),
+    )
+    lines = F.col("lines")
+    last_l = _last(lines, lambda s: s.startswith("#L"))
+    columns = F.coalesce(_labels(_rest(last_l)), F.array().cast("array<string>"))
+    if table == "scans":
+        return _scans(parsed.withColumn("columns", columns))
+
+    def event(s):  # a data row or an MCA group; other lines are no event
+        mca = F.regexp_replace(_rest(s), rf"\\+{_HWS}*(?:{_LB}|$)", " ")
+        return F.when(s.startswith("@A"), _rec(mca=F.lit(True), v=_floats(mca))).when(
+            (s != "") & ~s.startswith("#"), _rec(mca=F.lit(False), v=_floats(s))
+        )
+
+    events = F.filter(
+        F.transform(lines, event),
+        lambda e: e.isNotNull() & (e.mca | F.forall(e.v, lambda x: x.isNotNull())),
+    )
+    ev = parsed.select(
+        "file", "scan_number", columns.alias("columns"), events.alias("ev")
+    )
+
+    def point(e, j):  # a point's MCA is the MCA group right after it
+        nxt = F.try_element_at("ev", j + 2)
+        return _rec(d=~e.mca, row=e.v, mca=F.when(nxt.mca, nxt.v))
+
+    rows = F.filter(F.transform("ev", point), lambda r: r.d)
+    return ev.select("file", "scan_number", "columns", F.posexplode(rows)).select(
+        "file",
+        "scan_number",
+        F.col("pos").alias("point_index"),
+        _dict(F.col("columns"), F.col("col.row")).alias("values"),
+        F.col("col.mca").alias("mca"),
+    )
+
+
+def _scans(parsed):
+    """The scans table from the parsed blocks' `#` lines."""
+    ctl = parsed.select(
+        "*",
+        F.filter("lines", lambda s: s.startswith("#")).alias("ctl"),
+        _tokens(F.col("command")).alias("cmd"),
+    )
+
+    def tagged(tag, value):
+        return F.transform(F.filter("ctl", lambda s: s.startswith(tag)), value)
+
+    geo = tagged("#G", lambda s: _rec(
+        i=F.regexp_extract(s, r"^#G(\d+)" + _WS, 1).try_cast("int"),
+        v=_floats(F.regexp_replace(s, r"^#G\d+", "")),
+    ))
+    def first(s):
+        return _float(F.try_element_at(_tokens(_rest(s)), F.lit(1)))
+
+    fields = ctl.select(
+        "*",
+        _strip(_rest(_last("ctl", lambda s: s.startswith("#D")))).alias("date"),
+        _last(tagged("#T", first), lambda x: x.isNotNull()).alias("count_time"),
+        _last(tagged("#M", first), lambda x: x.isNotNull()).alias("monitor"),
+        _last(geo, lambda g: (g.i == 3) & (F.size(g.v) >= 9)).v.alias("ub"),
+        _last(geo, lambda g: (g.i == 4) & (F.size(g.v) > 0)).v.alias("g4"),
+        _last(
+            tagged("#Q", lambda s: _floats(_rest(s))),
+            lambda v: F.forall(v, lambda x: x.isNotNull()),
+        ).alias("hkl"),
+        F.try_element_at("cmd", F.lit(-2)).alias("n_pts"),
+        _indexed(F.col("ctl"), "#P", _floats).alias("positions"),
+    )
+    n_pts, cmd = F.col("n_pts"), F.col("cmd")
+    ascan = (F.size(cmd) >= 5) & F.try_element_at(cmd, F.lit(1)).isin(*_ASCAN)
+    declared = F.translate(n_pts, "_", "").try_cast("int") + 1
+    return fields.select(
+        "file",
+        "scan_number",
+        "command",
+        _spec_date(F.col("date")).alias("ts"),
+        "count_time",
+        "monitor",
+        F.slice("hkl", 1, 3).alias("hkl"),
+        F.slice("ub", 1, 9).alias("ub"),
+        F.try_element_at("g4", F.lit(1)).alias("wavelength"),
+        _dict(F.col("motor_names"), F.col("positions")).alias("motors"),
+        "columns",
+        F.when(ascan & n_pts.rlike(_INT), declared).alias("n_points_declared"),
+        F.exists("ctl", lambda s: s.startswith("#C") & F.lower(s).contains("abort"))
+        .alias("aborted"),
+    )

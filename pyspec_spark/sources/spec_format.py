@@ -19,8 +19,10 @@ the reference engine) and `SpecScan.__init__` (control-line parse +
 float64 data matrix).  SURVEY.md §0 citation policy applies: public-repo
 paths, no line numbers.
 
-This module is pure Python and I/O-free at parse time (operates on a
-scan block's text) so the Spark DataSource can ship one block per task.
+This module is pure Python and I/O-free at parse time (it operates on
+a scan block's text).  It serves the streaming source and the UDTF, and
+is the oracle that `read_spec`'s built-in-expression parse is tested
+against.
 """
 
 from __future__ import annotations
@@ -85,33 +87,25 @@ class Scan:
 
 
 _SCAN_START = re.compile(r"(?m)^#S (\d+)")
-_SCAN_START_BYTES = re.compile(rb"(?m)^#S (\d+)")
 
 
-def index_scans(text: str | bytes) -> list[tuple[int, int, int]]:
+def index_scans(text: str) -> list[tuple[int, int, int]]:
     """One sequential pass over the file: [(scan_number, start, end)].
 
     `start` is the offset of the `#S` line; `end` the offset one past the
-    block (next `#S` or EOF).  Offsets count characters for `str` input
-    and bytes for `bytes` input.  Mirrors SpecDataFile.index().
+    block (next `#S` or EOF).  Mirrors SpecDataFile.index().
     """
-    pat = _SCAN_START_BYTES if isinstance(text, bytes) else _SCAN_START
-    starts = [(int(m.group(1)), m.start()) for m in pat.finditer(text)]
+    starts = [(int(m.group(1)), m.start()) for m in _SCAN_START.finditer(text)]
     ends = [start for _, start in starts[1:]] + [len(text)]
     return [(num, start, end) for (num, start), end in zip(starts, ends)]
 
 
-def header_end(text: str | bytes) -> int:
-    """Offset where the pre-first-#S header block ends: the newline
-    before the first `#S` line, or EOF when no line follows it."""
-    stop = text.find(b"\n#S " if isinstance(text, bytes) else "\n#S ")
-    return len(text) if stop < 0 else stop
-
-
 def parse_file_header(text: str) -> FileHeader:
-    """Parse the pre-first-#S header block."""
+    """Parse the header block: the text up to the first newline that
+    is followed by `#S ` (all of it when there is none)."""
     hdr = FileHeader()
-    block = text[: header_end(text)]
+    stop = text.find("\n#S ")
+    block = text if stop < 0 else text[:stop]
     motor_lines: dict[int, list[str]] = {}
     for line in block.splitlines():
         if line.startswith("#F"):

@@ -1,10 +1,10 @@
 """SPEC scan-block explosion as a Python UDTF — SURVEY.md §2.11 UD4.
 
-The alternative surface to the `SpecDataSource` (S1): a table function
-that takes raw SPEC text (one scan block per input row, e.g. produced by
-`spark.read.text` + block splitting, or a column of blocks from any
-source) and lateral-explodes it into scan points.  Same parser core as
-the DataSource (`spec_format.parse_scan_block`), different plumbing —
+The alternative surface to `read_spec` (S1): a table function that
+takes raw SPEC text (one scan block per input row, e.g. a column of
+blocks from any source) and lateral-explodes it into scan points.  It
+runs the Python parser (`spec_format.parse_scan_block`) in a Python
+worker, where `read_spec` parses files with built-in expressions —
 useful when SPEC blocks arrive embedded in another table rather than as
 files.
 

@@ -21,12 +21,11 @@ from tests.fixtures import make_spec_dir
 
 @pytest.fixture(scope="module")
 def spec_session(spark, tmp_path_factory):
-    from pyspec_spark.sources.spec_datasource import register
+    from pyspec_spark.sources.spec_datasource import read_spec
 
     base = str(tmp_path_factory.mktemp("e2e_spec"))
     truths = make_spec_dir(base, n_files=1)
-    register(spark)
-    points = spark.read.format("specfile").option("path", base).load()
+    points = read_spec(spark, base)
     return points, truths[0]
 
 

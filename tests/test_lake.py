@@ -2036,3 +2036,64 @@ def test_atomic_publish_lives_only_in_lake_primitives():
                     hits.append((path, ln))
     assert len(hits) == 2
     assert set(hits) <= allowed, sorted(set(hits) - allowed)
+
+
+def _file_blooms_per_value(path, cols):
+    """The per-value Bloom build that ``_file_blooms`` vectorizes, kept
+    verbatim as the reference its manifests must stay byte-identical to."""
+    import base64
+
+    import pyarrow.parquet as pq
+
+    from pyspec_spark.lake import _BLOOM_MAX_BITS, _bloom_canon, _bloom_probes
+
+    out = {}
+    for c in cols:
+        try:
+            vals = set(pq.read_table(path, columns=[c]).column(c).to_pylist())
+        except Exception:
+            continue
+        canon = [b for b in (_bloom_canon(v) for v in vals) if b is not None]
+        if not canon:
+            continue
+        m = min(_BLOOM_MAX_BITS, max(64, 10 * len(canon)))
+        bits = bytearray((m + 7) // 8)
+        for b in canon:
+            for idx in _bloom_probes(b, m):
+                bits[idx >> 3] |= 1 << (idx & 7)
+        out[c] = {"m": m, "b64": base64.b64encode(bytes(bits)).decode()}
+    return out
+
+
+def test_vectorized_blooms_equal_per_value_build(tmp_path):
+    """Spark-free: the vectorized Bloom build gives the same dict as the
+    per-value loop for ints, strings, dictionary strings, nulls, bools,
+    floats, an all-null column and a column the file lacks."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspec_spark.lake import _bloom_may_contain, _file_blooms
+
+    rng = random.Random(7)
+    n = 3000
+    ints = [rng.randrange(-(10**12), 10**12) if i % 17 else None for i in range(n)]
+    strs = [f"doc-{rng.randrange(900)}-é" if i % 13 else None for i in range(n)]
+    table = pa.table({
+        "i": pa.array(ints, pa.int64()),
+        "u8": pa.array([i % 200 for i in range(n)], pa.uint8()),
+        "s": pa.array(strs, pa.string()),
+        "d": pa.array(strs, pa.string()).dictionary_encode(),
+        "b": pa.array([i % 3 == 0 for i in range(n)]),
+        "f": pa.array([i / 7 for i in range(n)]),
+        "z": pa.array([None] * n, pa.int32()),
+    })
+    path = str(tmp_path / "part.parquet")
+    pq.write_table(table, path)
+    cols = ["i", "u8", "s", "d", "b", "f", "z", "missing"]
+    got = _file_blooms(path, cols)
+    assert got == _file_blooms_per_value(path, cols)
+    assert sorted(got) == ["d", "i", "s", "u8"]
+    assert all(_bloom_may_contain(got["i"], v) for v in ints if v is not None)
+    assert all(_bloom_may_contain(got["s"], v) for v in strs if v is not None)

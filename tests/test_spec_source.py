@@ -24,11 +24,12 @@ def registered(spark):
     return spark
 
 
-def _points(spark, path, **opts):
-    r = spark.read.format("specfile").option("path", path)
-    for k, v in opts.items():
-        r = r.option(k, v)
-    return r.load()
+def _points(spark, path, table="points", scans=None):
+    from pyspec_spark.sources.spec_datasource import read_spec
+
+    if scans is not None:
+        scans = [int(s) for s in scans.split(",")]
+    return read_spec(spark, path, table, scans)
 
 
 def test_point_counts_match_truth(registered, spec_dir):
@@ -106,25 +107,16 @@ def test_duplicate_scan_number_kept(registered, spec_dir):
 
 
 def test_scans_option_prunes_partitions(registered, spec_dir):
-    """The ``scans`` read option must prune scan-block partitions in the
-    reader (the distributed twin of pyspec's byte-offset index)."""
-    from pyspec_spark.sources.spec_datasource import SpecDataSourceReader, read_spec
+    """The ``scans`` argument keeps exactly the listed scans' blocks
+    (the distributed twin of pyspec's byte-offset index)."""
+    from pyspec_spark.sources.spec_datasource import read_spec
 
     spark = registered
     base, _ = spec_dir
-    # end-to-end: the option-pruned read returns exactly the listed scans
     assert _points(spark, base, scans="5").count() == 3 * 81
-    # reader-level: the partition list shrinks to the listed scans
-    full = SpecDataSourceReader({"path": base}, "points")
-    assert len(full.partitions()) == 3 * 25 + 1  # 25 scans/file + 1 dup block
-    eq = SpecDataSourceReader({"path": base, "scans": "5"}, "points")
-    assert len(eq.partitions()) == 3  # one block per file
-    two = SpecDataSourceReader({"path": base, "scans": "2,5"}, "points")
-    assert len(two.partitions()) == 6  # scans 2,5 in each of 3 files
     assert read_spec(spark, base, scans=[5, 2]).count() == 3 * 2 * 81
-    # no listed scan exists: one sentinel partition that yields nothing
-    none = SpecDataSourceReader({"path": base, "scans": "9999"}, "points")
-    assert [list(none.read(p)) for p in none.partitions()] == [[]]
+    # no listed scan exists: an empty result, not an error
+    assert _points(spark, base, scans="9999").collect() == []
     # a range predicate on an unpruned frame is filtered after the parse
     # (no pushdown); its count must still be exact
     got = _points(spark, base).where("scan_number >= 10 AND scan_number < 12")
@@ -159,11 +151,108 @@ def test_union_of_filtered_branches_keeps_both_scans(registered, spec_dir):
     assert {row["scan_number"]: row["count"] for row in got} == {3: 3 * 11, 5: 3 * 81}
 
 
+# One file holding every parser quirk, and one file without a header.
+_QUIRKS = (
+    b"#F quirks.spec\r\n#E 1\r\n#D Thu Feb  4 10:00:00 2011\r\n"
+    b"#O0 th  tth\tchi\n#O1 mu\n#O0 th  tth\n\n"
+    b"#S 1 ascan th 0 1 4 1\n#D Thu Feb  4 10:00:00 2011\n"
+    b"#T bad\n#T 1 (Seconds)\n#T oops\n#M 1000 (Monitor)\n"
+    b"#G3 1 0 0 0 1 0 0 0 1\n#G3 1 2\n#G4 1.5405 0 0\n#Q 1 2 3 4\n#Q x\n"
+    b"#P0 1 2\n#P1 4\n#P0 5 6\n#N 3\r#L a  b  a\n"
+    b"1 2 3\n@A 1 2 \\\n3 4 \\\n  5\n"          # MCA chain on point 0
+    b"4\t5 6\t\n@A 9 \\\n\n@A 7 8\n"            # blank line ends the chain
+    b"x y z\n1d 2 3\n0x1p3 1 1\n"               # not Python floats
+    b"1e3 -inf nan\n1_000 +2. .5\n"
+    b"7 8 \\\n9 10 11\n#C note \\\n@A 42\n"      # only @A lines continue
+    b"1\xc2\xa02\x0c3 4\n#C Scan aborted after 3 points.\r\n\n"
+    b"#S 2 dscan x 0 1 2 1\r\n#D 2011-02-04 10:00:00\r\n#S foo bar\r\n"
+    b"#S  3 two spaces\r\n1 2\r\n3 4\r\n\n"      # no #L
+    b"#S 1 a2scan a 0 1 b 0 1 1_0 1\n#C bad \xff\xfe bytes\n"
+    b"#D Sat Feb 29 10:00:00 2011\n#D Mon February 1 10:00:00 2011\n"
+    b"#L a  b\n5 6\n\n"
+    b"#S 3 timescan \xff\n#D thu FEB 4 9:5:3 2011\n#G0 0\n#Q\n#L a\n"
+)
+_NO_HEADER = b"#S 1 ascan th 0 1 1 1\n#O0 zz\n#P0 7\n#L a  b\n1 2\n"
+
+
+def _canon(v):
+    """Comparable form of a row value: NaN-safe, timezone-free."""
+    import datetime
+    import math
+
+    if isinstance(v, float) and math.isnan(v):
+        return "nan"
+    if isinstance(v, datetime.datetime):
+        return v.timestamp()
+    if isinstance(v, dict):
+        return sorted((k, _canon(x)) for k, x in v.items())
+    if isinstance(v, (list, tuple)):
+        return [_canon(x) for x in v]
+    return v
+
+
+def test_native_parse_matches_spec_format(registered, tmp_path):
+    """read_spec's built-in-expression parse equals the Python parser
+    (spec_format through `_scan_rows`, the streaming reader's rows) on:
+    MCA chains, CRLF/CR/form-feed breaks, tabs, non-float rows, duplicate
+    labels, no #L, non-numbered #S lines, no header, a one-digit #D day,
+    an impossible date, aborted and duplicate scans, invalid UTF-8, and
+    a file name with glob and URL characters."""
+    from pyspec_spark.sources.spec_datasource import _scan_rows, read_spec
+    from pyspec_spark.sources.spec_format import index_scans, parse_file_header
+
+    # glob and URL characters in a name must reach `file` unchanged
+    files = (("quirks [1] a+b%20.spec", _QUIRKS), ("bare.spec", _NO_HEADER))
+    for name, raw in files:
+        (tmp_path / name).write_bytes(raw)
+    for table in ("points", "scans"):
+        want = []
+        for name, raw in files:
+            text = raw.decode("utf-8", errors="replace")
+            motors = parse_file_header(text).motor_names
+            for _, s, e in index_scans(text):
+                want += _scan_rows(table, name, motors, text[s:e])
+        got = read_spec(registered, str(tmp_path), table).collect()
+        canon = [sorted(repr(_canon(tuple(r))) for r in rows) for rows in (got, want)]
+        assert canon[0] == canon[1]
+        assert len(want) == (5 if table == "scans" else 11)
+    bad = tmp_path / "bad" / "nocmd.spec"
+    bad.parent.mkdir()
+    bad.write_text("#S 1 ascan\n1 2\n#S 2\n3 4\n")
+    with pytest.raises(Exception, match="not a scan block"):
+        read_spec(registered, str(bad)).collect()
+    assert len(read_spec(registered, str(bad), scans=[1]).collect()) == 1
+
+
+def test_batch_reads_plan_no_python_node(registered, spec_dir):
+    """The batch tables are built-in expressions end to end: no node of
+    their executed plans starts a Python worker, and planning them runs
+    no Spark job."""
+    import re
+
+    from pyspec_spark.api import SpecDataFile
+    from pyspec_spark.sources.spec_datasource import read_spec
+
+    spark = registered
+    base, _ = spec_dir
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    frames = [
+        read_spec(spark, base),
+        read_spec(spark, base, "scans", scans=[5]),
+        SpecDataFile(spark, base)[5].wide("Theta", "Detector"),
+    ]
+    plans = [f._jdf.queryExecution().executedPlan().toString() for f in frames]
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    for plan in plans:
+        assert "FileScan text" in plan
+        assert not re.search(r"Python|Pandas|Arrow", plan), plan
+
+
 def test_non_ascii_bytes_parse_like_whole_file(registered, tmp_path):
-    """Partitions read the header and their block by byte offset; with
-    multi-byte and invalid UTF-8 before and inside scan blocks, the rows
-    equal a parse of the whole decoded file."""
-    from pyspec_spark.sources.spec_datasource import SpecDataSourceReader
+    """With multi-byte and invalid UTF-8 before and inside scan blocks,
+    the rows equal a parse of the whole decoded file."""
+    from pyspec_spark.sources.spec_datasource import read_spec
     from pyspec_spark.sources.spec_format import (
         index_scans,
         parse_file_header,
@@ -191,15 +280,12 @@ def test_non_ascii_bytes_parse_like_whole_file(registered, tmp_path):
             else:
                 want += [(scan.scan_number, i, dict(zip(scan.columns, row)))
                          for i, row in enumerate(scan.data)]
-        reader = SpecDataSourceReader({"path": str(f)}, table)
-        got = [row for p in reader.partitions() for row in reader.read(p)]
+        got = read_spec(registered, str(f), table).collect()
         if table == "scans":
             got = [(r[1], r[2], r[9]) for r in got]
         else:
             got = [(r[1], r[2], r[3]) for r in got]
         assert got == want and len(want) == (2 if table == "scans" else 5)
-    df = registered.read.format("specfile").option("path", str(f)).load()
-    assert df.count() == 5
 
 
 def test_reload_append_pattern(registered, spec_dir, tmp_path):
