@@ -26,6 +26,13 @@ table.  This module closes that caveat with the table-format recipe
   no path inference is needed on read).  Upsert/delete rewrite only
   the files whose partition is affected — the merge_upsert O(k)
   property, now with old versions intact.
+- **One reader, one stager.**  ``_read_files`` is the only way
+  manifest entries become a DataFrame, and ``_stage`` is the only way a
+  write op stages its new files and the schema fields it commits.  They
+  are the only places that know the column mapping (rename/retype
+  eras) and the add-column merge, so every op reads and writes a
+  mapped or mixed-schema table the same way.  Each op reads its parent
+  manifest once and passes it to both.
 
 At 100 TB this is exactly the metadata/data split that makes object-
 store lakes workable: planning reads one small JSON (file listing +
@@ -246,6 +253,14 @@ def _load_manifest(root: str, version: int) -> dict:
         return json.load(f)
 
 
+def _parent(root: str, base_version=_UNSET) -> tuple[int | None, dict]:
+    """(parent version, parent manifest) of a write op: the pinned
+    ``base_version`` or else the latest.  An empty table is
+    ``(None, {"files": []})``, so callers need no empty-table branch."""
+    prev = latest_version(root) if base_version is _UNSET else base_version
+    return prev, _load_manifest(root, prev) if prev is not None else {"files": []}
+
+
 def lake_history(root: str) -> list[dict]:
     """All manifests oldest-first (version, op, ts, n_files)."""
     out = []
@@ -283,28 +298,30 @@ def _commit(
     version since, the link fails with LakeConflict instead of
     silently serializing a merge computed against a stale base (a lost
     update).  The loser's staged data files become orphans, which
-    lake_vacuum reclaims."""
+    lake_vacuum reclaims.
+
+    The parent manifest is read once, here, for everything the commit
+    carries forward.  There is no manifest cache: a published version
+    is immutable, but a root can be deleted and rebuilt in one process,
+    and the parent reads an op makes (its own plus this one) cost about
+    a millisecond of ops that take hundreds."""
     os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
     version = 1 if parent is None else parent + 1
+    pm = _load_manifest(root, parent) if parent is not None else {}
     # stream_commits carries forward through EVERY commit (append,
     # upsert, compact, ...) so the exactly-once batch watermark of a
     # streaming writer survives interleaved maintenance commits
-    carried: dict = {}
-    if parent is not None:
-        carried = dict(
-            _load_manifest(root, parent).get("stream_commits", {})
-        )
+    carried = dict(pm.get("stream_commits", {}))
     if stream_commit is not None:
         qname, batch_id = stream_commit
         carried[qname] = batch_id
     # schema_mixed: do the LIVE files span more than one writer schema?
     # True only while parent files carry over across an add-column
     # evolution; a full rewrite (overwrite/compact) resets it.  Gates
-    # lake_read's mergeSchema so the homogeneous path never pays the
+    # _read_files' mergeSchema so the homogeneous path never pays the
     # every-footer merge.
     mixed = False if schema_mixed is _UNSET else bool(schema_mixed)
     if schema_mixed is _UNSET and retains_parent and parent is not None:
-        pm = _load_manifest(root, parent)
         mixed = bool(pm.get("schema_mixed")) or (
             schema is not None
             and pm.get("schema") is not None
@@ -325,11 +342,7 @@ def _commit(
     # so row-level ops and plain appends preserve the clustered layout
     # without every call site repeating it
     if cluster_col is _UNSET:
-        cluster_col = (
-            _load_manifest(root, parent).get("cluster_col")
-            if parent is not None
-            else None
-        )
+        cluster_col = pm.get("cluster_col")
     if columns is _UNSET:
         columns = None
     if schemas is _UNSET:
@@ -424,6 +437,32 @@ def _stage_files(
                 entry["bloom"] = bl
         entries.append(entry)
     return entries
+
+
+def _stage(
+    spark: SparkSession,
+    root: str,
+    m: dict,
+    df: DataFrame,
+    partition_col: str | None,
+    bloom_cols: list[str] | None,
+    cluster_col: str | None,
+) -> tuple[list[dict], dict]:
+    """Stage ``df`` as a commit on top of manifest ``m``: returns the new
+    file entries and the schema fields for ``_commit`` (``schema``, plus
+    ``columns`` and ``schemas`` on a column-mapped table, whose files
+    stage under physical names in the current era)."""
+    if m.get("columns"):
+        entries, columns, schemas = _stage_mapped_append(
+            spark, root, m, df, partition_col, bloom_cols, cluster_col
+        )
+        schema = {c["name"]: c["type"] for c in columns}
+        return entries, {"schema": schema, "columns": columns, "schemas": schemas}
+    entries = _stage_files(
+        spark, root, df, partition_col, bloom_cols=bloom_cols,
+        cluster_col=cluster_col,
+    )
+    return entries, {"schema": _schema_fields(df)}
 
 
 # Stats columns are harvested from the parquet FOOTER the file itself
@@ -590,30 +629,13 @@ def lake_append(
     at-rest key (one file per (partition, cluster) value — see
     _stage_files); once set it is a TABLE layout property: later
     appends and row-level rewrites preserve it without repeating it."""
-    _check_schema_evolution(root, df)
-    prev = latest_version(root) if base_version is _UNSET else base_version
-    m = _load_manifest(root, prev) if prev is not None else None
-    old = m["files"] if m is not None else []
-    cl = cluster_col if cluster_col is not None else (
-        m.get("cluster_col") if m is not None else None
-    )
-    if m is not None and m.get("columns"):
-        df_phys, new_entries, columns, schemas = _stage_mapped_append(
-            spark, root, m, df, partition_col, bloom_cols, cluster_col=cl
-        )
-        return _commit(
-            root, "append", old + new_entries, partition_col, prev,
-            schema={c["name"]: c["type"] for c in columns},
-            stream_commit=stream_commit, columns=columns, schemas=schemas,
-            cluster_col=cl,
-        )
-    new = _stage_files(
-        spark, root, df, partition_col, bloom_cols=bloom_cols, cluster_col=cl
-    )
+    prev, m = _parent(root, base_version)
+    _check_schema_fields(m.get("schema"), df)
+    cl = cluster_col if cluster_col is not None else m.get("cluster_col")
+    new, fields = _stage(spark, root, m, df, partition_col, bloom_cols, cl)
     return _commit(
-        root, "append", old + new, partition_col, prev,
-        schema=_schema_fields(df), stream_commit=stream_commit,
-        cluster_col=cl,
+        root, "append", m["files"] + new, partition_col, prev,
+        stream_commit=stream_commit, cluster_col=cl, **fields,
     )
 
 
@@ -659,25 +681,41 @@ def lake_read(
     if v is None:
         raise FileNotFoundError(f"no committed version under {root}")
     m = _load_manifest(root, v)
-    if not m["files"]:
-        raise ValueError(f"version {v} of {root} is empty")
     paths = [os.path.join(root, e["path"]) for e in m["files"]]
     missing = [p for p in paths if not os.path.exists(p)]
     if missing:
         raise FileNotFoundError(
             f"version {v} references vacuumed files, e.g. {missing[0]}"
         )
+    return _read_files(spark, root, m, m["files"])
+
+
+def _read_files(
+    spark: SparkSession, root: str, m: dict, entries: list[dict]
+) -> DataFrame:
+    """The one way entries of manifest ``m`` become a DataFrame, with
+    ``m``'s logical schema whichever of its files they are.  A mapped
+    table reads through its column mapping (``_read_mapped``).  Files
+    spanning an add-column evolution (``schema_mixed``) merge footers,
+    and a recorded column that none of the entries holds reads as a
+    typed NULL, the rule ``_read_mapped`` applies to eras.  Otherwise
+    this is a plain parquet read of the listed files."""
+    if not entries:
+        raise ValueError(f"version {m['version']} of {root} is empty")
     if m.get("columns"):
-        # column-mapped table (rename/retype): project each
-        # schema era physical -> logical; this version's manifest holds
-        # THIS version's mapping, so time travel is era-correct
-        return _read_mapped(spark, root, m, m["files"])
-    reader = spark.read
-    if m.get("schema_mixed"):
-        # live files span an add-column evolution: merge footers so the
-        # union schema comes back (old files read NULL for new columns)
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*paths)
+        return _read_mapped(spark, root, m, entries)
+    paths = [os.path.join(root, e["path"]) for e in entries]
+    if not m.get("schema_mixed"):
+        return spark.read.parquet(*paths)
+    df = spark.read.option("mergeSchema", "true").parquet(*paths)
+    have, schema = df.columns, m.get("schema") or {}
+    return df.select(
+        *[
+            F.col(c) if c in have else F.lit(None).cast(t).alias(c)
+            for c, t in schema.items()
+        ],
+        *[c for c in have if c not in schema],
+    )
 
 
 def _spark_part_strings(df: DataFrame, partition_col: str) -> set[str]:
@@ -721,15 +759,6 @@ def _split_touched(
     return touched, kept
 
 
-def _read_entries(
-    spark: SparkSession, root: str, entries: list[dict], mixed: bool
-) -> DataFrame:
-    reader = spark.read
-    if mixed:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[os.path.join(root, e["path"]) for e in entries])
-
-
 def lake_upsert(
     spark: SparkSession,
     root: str,
@@ -750,39 +779,15 @@ def lake_upsert(
     ``base_version`` pins the transaction base (see lake_append): an
     interleaved commit then raises LakeConflict at publish time rather
     than silently merging against state the caller never read."""
-    _check_schema_evolution(root, updates)
+    prev, m = _parent(root, base_version)
+    _check_schema_fields(m.get("schema"), updates)
     updates = updates.persist()
     try:
         parts = _spark_part_strings(updates, partition_col)
-        prev = (
-            latest_version(root) if base_version is _UNSET else base_version
-        )
-        mapped = (
-            _load_manifest(root, prev).get("columns")
-            if prev is not None
-            else None
-        )
-        if prev is not None:
-            m = _load_manifest(root, prev)
-            old = m["files"]
-            touched, kept_entries = _split_touched(
-                old, parts, m, partition_col
-            )
-        else:
-            m, touched, kept_entries = None, [], []
+        touched, kept = _split_touched(m["files"], parts, m, partition_col)
+        merged = updates
         if touched:
-            # mapped tables (rename/retype eras): the touched
-            # files are read THROUGH the mapping (logical view) so the
-            # survivors splice with logical updates; the rewrite then
-            # stages back under physical names in the current era
-            tgt = (
-                _read_mapped(spark, root, m, touched)
-                if mapped
-                else _read_entries(
-                    spark, root, touched, bool(m.get("schema_mixed"))
-                )
-            )
-            survivors = tgt.join(
+            survivors = _read_files(spark, root, m, touched).join(
                 updates.select(key).distinct(), key, "left_anti"
             )
             # missing-on-either-side columns fill with NULL: updates may
@@ -790,29 +795,14 @@ def lake_upsert(
             merged = survivors.unionByName(
                 updates, allowMissingColumns=True
             )
-        else:
-            merged = updates
-        if mapped:
-            _p, new, columns, schemas = _stage_mapped_append(
-                spark, root, m, merged, partition_col, bloom_cols,
-                cluster_col=m.get("cluster_col"),
-            )
-            return _commit(
-                root, "upsert", kept_entries + new, partition_col, prev,
-                schema={c["name"]: c["type"] for c in columns},
-                retains_parent=bool(kept_entries),
-                stream_commit=stream_commit,
-                columns=columns, schemas=schemas,
-            )
-        new = _stage_files(
-            spark, root, merged, partition_col, bloom_cols=bloom_cols,
-            cluster_col=m.get("cluster_col") if m is not None else None,
+        new, fields = _stage(
+            spark, root, m, merged, partition_col, bloom_cols,
+            m.get("cluster_col"),
         )
         return _commit(
-            root, "upsert", kept_entries + new, partition_col, prev,
-            schema=_schema_fields(merged),
-            retains_parent=bool(kept_entries),
-            stream_commit=stream_commit,
+            root, "upsert", kept + new, partition_col, prev,
+            retains_parent=bool(kept), stream_commit=stream_commit,
+            **fields,
         )
     finally:
         updates.unpersist()
@@ -840,16 +830,9 @@ def lake_replace_partitions(
     landing inside the read→replace window raises LakeConflict instead
     of silently publishing a merge computed against a stale base (the
     lost-update race)."""
-    _check_schema_evolution(root, df)
-    prev = latest_version(root) if base_version is _UNSET else base_version
-    if prev is None:
-        new = _stage_files(spark, root, df, partition_col, bloom_cols=bloom_cols)
-        return _commit(
-            root, "replace_partitions", new, partition_col, prev,
-            schema=_schema_fields(df), stream_commit=stream_commit,
-        )
-    m = _load_manifest(root, prev)
-    touched, kept_entries = _split_touched(m["files"], parts, m, partition_col)
+    prev, m = _parent(root, base_version)
+    _check_schema_fields(m.get("schema"), df)
+    touched, kept = _split_touched(m["files"], parts, m, partition_col)
     if any(e["partition"] is None for e in touched):
         # a partition-less file (z-order compaction output) can hold
         # rows of ANY partition; dropping it here would lose the rows
@@ -859,30 +842,12 @@ def lake_replace_partitions(
             "lake_replace_partitions on a table with partition-less "
             "files — use lake_upsert (its survivors re-read covers them)"
         )
-    if m.get("columns"):
-        # mapped table: the caller's df is LOGICAL complete
-        # content — translate to physical names and stamp the era
-        _p, new, columns, schemas = _stage_mapped_append(
-            spark, root, m, df, partition_col, bloom_cols,
-            cluster_col=m.get("cluster_col"),
-        )
-        return _commit(
-            root, "replace_partitions", kept_entries + new,
-            partition_col, prev,
-            schema={c["name"]: c["type"] for c in columns},
-            retains_parent=bool(kept_entries),
-            stream_commit=stream_commit,
-            columns=columns, schemas=schemas,
-        )
-    new = _stage_files(
-        spark, root, df, partition_col, bloom_cols=bloom_cols,
-        cluster_col=m.get("cluster_col"),
+    new, fields = _stage(
+        spark, root, m, df, partition_col, bloom_cols, m.get("cluster_col")
     )
     return _commit(
-        root, "replace_partitions", kept_entries + new, partition_col, prev,
-        schema=m.get("schema") or _schema_fields(df),
-        retains_parent=bool(kept_entries),
-        stream_commit=stream_commit,
+        root, "replace_partitions", kept + new, partition_col, prev,
+        retains_parent=bool(kept), stream_commit=stream_commit, **fields,
     )
 
 
@@ -903,58 +868,31 @@ def lake_delete(
     actual forget step."""
     delete_keys = delete_keys.persist()
     try:
-        prev = latest_version(root)
+        prev, m = _parent(root)
         if prev is None:
             return 0
-        m = _load_manifest(root, prev)
-        old = m["files"]
+        keys = delete_keys.select(key).distinct()
         if partition_col in delete_keys.columns:
             parts = _spark_part_strings(delete_keys, partition_col)
         else:
-            cur = lake_read(spark, root)
+            cur = _read_files(spark, root, m, m["files"])
             parts = _spark_part_strings(
-                cur.select(key, partition_col).join(
-                    delete_keys.select(key).distinct(), key, "left_semi"
-                ),
+                cur.select(key, partition_col).join(keys, key, "left_semi"),
                 partition_col,
             )
-        touched, kept_entries = _split_touched(old, parts, m, partition_col)
+        touched, kept = _split_touched(m["files"], parts, m, partition_col)
         if not touched:
             return prev
-        # mapped tables: survivors splice in the LOGICAL view and
-        # the rewrite stages back under physical names, current era
-        tgt = (
-            _read_mapped(spark, root, m, touched)
-            if m.get("columns")
-            else _read_entries(
-                spark, root, touched, bool(m.get("schema_mixed"))
-            )
+        survivors = _read_files(spark, root, m, touched).join(
+            keys, key, "left_anti"
         )
-        survivors = tgt.join(
-            delete_keys.select(key).distinct(), key, "left_anti"
+        new, fields = _stage(
+            spark, root, m, survivors, partition_col, bloom_cols,
+            m.get("cluster_col"),
         )
-        if m.get("columns"):
-            _p, new, columns, schemas = _stage_mapped_append(
-                spark, root, m, survivors, partition_col, bloom_cols,
-                cluster_col=m.get("cluster_col"),
-            )
-            return _commit(
-                root, "delete", kept_entries + new, partition_col, prev,
-                schema={c["name"]: c["type"] for c in columns},
-                retains_parent=bool(kept_entries),
-                columns=columns, schemas=schemas,
-            )
-        new = _stage_files(
-            spark, root, survivors, partition_col, bloom_cols=bloom_cols,
-            cluster_col=m.get("cluster_col"),
-        )
-        # a delete never changes the TABLE schema: commit the parent's
-        # recorded schema (survivors of old pre-evolution files may lack
-        # the newest columns; mixed-ness carries via retains_parent)
         return _commit(
-            root, "delete", kept_entries + new, partition_col, prev,
-            schema=m.get("schema") or _schema_fields(survivors),
-            retains_parent=bool(kept_entries),
+            root, "delete", kept + new, partition_col, prev,
+            retains_parent=bool(kept), **fields,
         )
     finally:
         delete_keys.unpersist()
@@ -1300,80 +1238,32 @@ def lake_append_stream(
     manifest to inherit from); thereafter the manifest's recorded
     layout wins, exactly like lake_append."""
     staged: list[dict] | None = None
-    staged_cols = None
-    commit_cl = None
-    columns = schemas = None
-    schema: dict | None = None
+    staged_on = None
     for _ in range(max_retries):
-        last = lake_last_batch(root, query_name)
+        prev, m = _parent(root)
+        last = m.get("stream_commits", {}).get(query_name)
         if last is not None and batch_id <= last:
             return None
-        prev = latest_version(root)
-        m = _load_manifest(root, prev) if prev is not None else None
-        old = m["files"] if m is not None else []
-        cols_now = m.get("columns") if m is not None else None
-        cl_now = (
-            m.get("cluster_col") if m is not None else cluster_col
-        )
-        if staged is not None and (
-            staged_cols != cols_now or commit_cl != cl_now
-        ):
-            # the mapping or the clustered layout moved between staging
-            # and this retry: the staged files carry the wrong
-            # era/physical layout (or would re-record a stale layout)
-            staged = None
-        if staged is None:
-            staged_cols = cols_now
-            commit_cl = cl_now
-            if cols_now:
-                out = _translate_stream_batch(m, df)
-                # validate against the PINNED base manifest m — a
-                # commit racing in between would make a latest-read
-                # check reject a batch that stages cleanly here and
-                # resolves through the LakeConflict retry
-                _check_schema_fields(m.get("schema"), out)
-                _p, staged, columns, schemas = _stage_mapped_append(
-                    spark, root, m, out, partition_col, bloom_cols,
-                    cluster_col=m.get("cluster_col"),
-                )
-                schema = {c["name"]: c["type"] for c in columns}
-            else:
-                _check_schema_fields(
-                    m.get("schema") if m is not None else None, df
-                )
-                staged = _stage_files(
-                    spark, root, df, partition_col, bloom_cols=bloom_cols,
-                    cluster_col=commit_cl,
-                )
-                columns = schemas = None
-                schema = _schema_fields(df)
-        else:
-            # a retry whose base moved but whose mapping did not: the
-            # staged files are still valid, but the batch must STILL
-            # satisfy the add-column contract against the NEW base —
-            # without this, a concurrent add-column append would be
-            # silently narrowed back out of the recorded schema by
-            # this commit's schema=_schema_fields(df)
-            _check_schema_fields(
-                m.get("schema") if m is not None else None,
-                df if not staged_cols else _translate_stream_batch(m, df),
+        cl = m.get("cluster_col") if prev is not None else cluster_col
+        out = _translate_stream_batch(m, df) if m.get("columns") else df
+        # every attempt validates against its PINNED base m: a commit
+        # racing in between must neither reject a batch that resolves
+        # through the LakeConflict retry, nor (a concurrent add-column
+        # append) be narrowed back out of the recorded schema
+        _check_schema_fields(m.get("schema"), out)
+        if staged is None or staged_on != (m.get("columns"), cl):
+            # first attempt, or the mapping or the clustered layout
+            # moved since staging: the staged files would carry the
+            # wrong era/physical layout or re-record a stale layout
+            staged_on = (m.get("columns"), cl)
+            staged, fields = _stage(
+                spark, root, m, out, partition_col, bloom_cols, cl
             )
         try:
-            kw = (
-                {"columns": columns, "schemas": schemas}
-                if staged_cols
-                else {}
-            )
             return _commit(
-                root,
-                "stream_append",
-                old + staged,
-                partition_col,
-                prev,
-                stream_commit=(query_name, batch_id),
-                schema=schema,
-                cluster_col=commit_cl,
-                **kw,
+                root, "stream_append", m["files"] + staged, partition_col,
+                prev, stream_commit=(query_name, batch_id), cluster_col=cl,
+                **fields,
             )
         except LakeConflict:
             continue
@@ -1457,25 +1347,11 @@ def lake_scan(
     if v is None:
         raise FileNotFoundError(f"no committed version under {root}")
     m = _load_manifest(root, v)
-    # mapped tables: footer stats and blooms are recorded under
-    # PHYSICAL names — translate the predicate columns for file-level
-    # matching, then apply the LOGICAL predicates on the mapped read
-    phys_where = where
-    if m.get("columns"):
-        l2p = {c["name"]: c["physical"] for c in m["columns"]}
-        phys_where = [(l2p.get(c, c), op, val) for (c, op, val) in where]
+    phys_where = _phys_where(m, where)
     kept = [e for e in m["files"] if _file_may_match(e, phys_where)]
-    if not kept:
-        full = lake_read(spark, root, version=v)
-        cond = _pred_column(full, where)
-        return full.where(cond).limit(0)
-    if m.get("columns"):
-        df = _read_mapped(spark, root, m, kept)
-    else:
-        df = spark.read.parquet(
-            *[os.path.join(root, e["path"]) for e in kept]
-        )
-    return df.where(_pred_column(df, where))
+    df = _read_files(spark, root, m, kept or m["files"])
+    df = df.where(_pred_column(df, where))
+    return df if kept else df.limit(0)
 
 
 def lake_scan_in(
@@ -1501,35 +1377,21 @@ def lake_scan_in(
     if v is None:
         raise FileNotFoundError(f"no committed version under {root}")
     m = _load_manifest(root, v)
-    phys = {}
-    if m.get("columns"):
-        phys = {c["name"]: c["physical"] for c in m["columns"]}
+    phys_in = _phys_where(m, where_in)
 
     def may_match(entry: dict) -> bool:
-        for col, values in where_in:
-            pc = phys.get(col, col)
-            if not any(
-                _file_may_match(entry, [(pc, "=", val)]) for val in values
-            ):
-                return False
-        return True
+        return all(
+            any(_file_may_match(entry, [(pc, "=", val)]) for val in values)
+            for pc, values in phys_in
+        )
 
     empty_in = any(not list(vals) for _, vals in where_in)
     kept = [] if empty_in else [e for e in m["files"] if may_match(e)]
-
-    def row_filter(df: DataFrame):
-        cond = F.lit(True)
-        for col, values in where_in:
-            cond = cond & F.col(col).isin(list(values))
-        return df.where(cond)
-
-    if not kept:
-        return row_filter(lake_read(spark, root, version=v)).limit(0)
-    if m.get("columns"):
-        return row_filter(_read_mapped(spark, root, m, kept))
-    return row_filter(
-        spark.read.parquet(*[os.path.join(root, e["path"]) for e in kept])
-    )
+    cond = F.lit(True)
+    for col, values in where_in:
+        cond = cond & F.col(col).isin(list(values))
+    df = _read_files(spark, root, m, kept or m["files"]).where(cond)
+    return df if kept else df.limit(0)
 
 
 def lake_scan_file_counts(
@@ -1539,11 +1401,20 @@ def lake_scan_file_counts(
     skipping tests and any cost estimator want."""
     v = latest_version(root) if version is None else version
     m = _load_manifest(root, v)
-    if m.get("columns"):
-        l2p = {c["name"]: c["physical"] for c in m["columns"]}
-        where = [(l2p.get(c, c), op, val) for (c, op, val) in where]
+    where = _phys_where(m, where)
     kept = sum(1 for e in m["files"] if _file_may_match(e, where))
     return kept, len(m["files"])
+
+
+def _phys_where(m: dict, where: list[tuple]) -> list[tuple]:
+    """Predicates with their leading column name translated logical →
+    physical: a mapped table's footer stats and blooms are recorded
+    under physical names (the row filters stay logical, on the mapped
+    read)."""
+    if not m.get("columns"):
+        return where
+    l2p = {c["name"]: c["physical"] for c in m["columns"]}
+    return [(l2p.get(p[0], p[0]), *p[1:]) for p in where]
 
 
 def _pred_column(df: DataFrame, where: list[tuple]):
@@ -1603,23 +1474,25 @@ def lake_compact_zorder(
 
 # ---------------------------------------------------------------------------
 # Schema evolution (add-column).  The manifest records each commit's
-# writer schema; lake_read turns on parquet schema merging ONLY when
+# writer schema; _read_files turns on parquet schema merging ONLY when
 # the live files actually disagree (mergeSchema reads every footer —
 # needless cost on the common homogeneous path).  Old files simply
-# lack the new column and read as NULL; time travel to a pre-evolution
-# version returns the old schema exactly.  Column REMOVAL or type
-# narrowing is refused — at 100 TB a silent incompatible append is a
-# corpus-wide poisoning, so the check is at commit time, not read time.
+# lack the new column and read as NULL, whichever files a scan keeps;
+# time travel to a pre-evolution version returns the old schema
+# exactly.  Column REMOVAL or type narrowing is refused — at 100 TB a
+# silent incompatible append is a corpus-wide poisoning, so the check
+# is at commit time, against the parent manifest the op read, not at
+# read time.
 # ---------------------------------------------------------------------------
 def _schema_fields(df: DataFrame) -> dict:
     return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
 
 def _check_schema_fields(old: dict | None, df: DataFrame) -> None:
-    """The add-column-only contract against an explicit base schema —
-    callers with a PINNED base manifest (lake_append_stream's retry
-    loop) check against the base they actually staged for, not
-    whatever is latest at call time."""
+    """The add-column-only contract against the schema of the parent
+    manifest the op read — the base it stages for, not whatever is
+    latest at call time (a commit landing in between raises
+    LakeConflict at publish)."""
     if old is None:
         return
     new = _schema_fields(df)
@@ -1635,13 +1508,6 @@ def _check_schema_fields(old: dict | None, df: DataFrame) -> None:
             f"column type change refused: "
             f"{[(c, old[c], new[c]) for c in changed]}"
         )
-
-
-def _check_schema_evolution(root: str, df: DataFrame) -> None:
-    prev = latest_version(root)
-    if prev is None:
-        return
-    _check_schema_fields(_load_manifest(root, prev).get("schema"), df)
 
 
 def lake_diff(
@@ -1764,22 +1630,23 @@ def lake_diff(
 # retype is a read-time cast of older eras, never a table rewrite.
 #
 # Rules of the road:
+# - two helpers are the only places that know the mapping: _read_files
+#   (the one way manifest entries become a DataFrame) and _stage (the
+#   one way a write op stages files and its commit's schema fields);
+#   every op goes through them, so no op has a mapped branch of its own;
 # - the mapping initializes lazily on the first rename/retype (ids =
 #   current ordinals, physical = current names, every live file
 #   stamped era 0); unmapped tables behave exactly as before;
 # - mapped READS project each era physical→logical with casts and
 #   union the eras — one narrow select per era, no mergeSchema;
-# - appends translate logical→physical before staging and stamp the
-#   current era (allocating a new era after a retype);
+# - staging translates logical→physical and stamps the current era
+#   (allocating a new era after a retype), so row-level rewrites splice
+#   the caller's logical rows with survivors read in the logical view;
 # - the mapping rides every retains_parent commit (_commit carries it
 #   like stream_commits); every FULL-REWRITE op (compact / overwrite /
 #   z-order / change_layout) stages from the mapped logical view, so
 #   it MATERIALIZES the mapping and clears it — lake_compact is the
 #   sanctioned "make it physical" pass;
-# - row-level rewrites (upsert/delete/replace_partitions) work on a
-#   mapped table: touched files are read THROUGH the mapping (logical
-#   view), survivors splice with the caller's logical rows, and the
-#   rewrite stages back under physical names in the current era;
 # - the partition column can be neither renamed nor retyped (its
 #   string rendering is baked into directory names and manifests).
 #
@@ -1931,11 +1798,7 @@ def _read_mapped(
         ]
         part = df.select(*proj)
         out = part if out is None else out.unionByName(part)
-    if out is None:
-        raise ValueError(f"no entries to read under {root}")
     return out
-
-
 
 
 
@@ -2010,7 +1873,7 @@ def _stage_mapped_append(
             cluster_col=cl_phys,
         )
     ]
-    return df_phys, entries, columns, schemas
+    return entries, columns, schemas
 
 
 def lake_drop_column(root: str, name: str) -> int:

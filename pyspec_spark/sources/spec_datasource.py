@@ -31,8 +31,9 @@ spread over the cores; one file is one task and must stay under 2 GB.
 A loaded frame is a snapshot: its text is cut to the file size Spark
 listed at load, so scans appended later are seen by a new read (pyspec
 `reload`).  Where the parse differs from spec_format:
-  - names starting with `_` or `.` are skipped, as by every Spark file
-    source;
+  - a directory lists no name starting with `_` or `.`, as in every
+    Spark file source, and naming such a file raises ValueError
+    (Spark would read it as empty);
   - numbers take ASCII digits only (Python's int() and float() also
     take other Unicode digits);
   - a value spec_format raises on (an MCA, `#G` or `#P` value that is
@@ -94,6 +95,18 @@ SCANS_SCHEMA = StructType(
 )
 
 
+def _hidden(path: str) -> bool:
+    """A name Spark's file sources skip even when it is named
+    explicitly: a leading `.`, a leading `_` without `=`, or a
+    `._COPYING_` suffix."""
+    name = os.path.basename(path)
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
 def _resolve_paths(path_opt: str) -> list[str]:
     paths: list[str] = []
     for p in path_opt.split(","):
@@ -101,7 +114,10 @@ def _resolve_paths(path_opt: str) -> list[str]:
         if not p:
             continue
         if os.path.isdir(p):
-            paths.extend(sorted(globmod.glob(os.path.join(p, "*"))))
+            # a directory lists what Spark lists: `_SUCCESS` and other
+            # hidden names are not data
+            found = sorted(globmod.glob(os.path.join(p, "*")))
+            paths.extend(q for q in found if not _hidden(q))
         else:
             paths.extend(sorted(globmod.glob(p)) or [p])
     return [p for p in paths if os.path.isfile(p)]
@@ -412,6 +428,12 @@ def read_spec(spark, path: str, table: str = "points", scans=None):
     ``scans`` keeps only the listed scan numbers' blocks, before any of
     their lines is parsed."""
     paths = _resolve_paths(path)
+    hidden = [p for p in paths if _hidden(p)]
+    if hidden:
+        raise ValueError(
+            f"{hidden[0]}: Spark's file sources skip names starting with "
+            "'_' or '.', so this file would read as empty; rename it"
+        )
     if not paths:
         schema = SCANS_SCHEMA if table == "scans" else POINTS_SCHEMA
         return spark.createDataFrame([], schema)

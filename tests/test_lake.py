@@ -366,9 +366,10 @@ def test_zorder_compact_makes_2d_skipping_effective(spark, tmp_path):
 
 
 def test_schema_evolution_add_column(spark, tmp_path):
-    """Add-column appends merge on read (old rows NULL); drops and
-    retypes are refused at commit time; a rewrite op resets the mixed
-    flag so homogeneous reads skip footer merging."""
+    """Add-column appends merge on read (old rows NULL), also in scans
+    that skip down to old files; drops and retypes are refused at
+    commit time; a rewrite op resets the mixed flag so homogeneous
+    reads skip footer merging."""
     from pyspec_spark.lake import _load_manifest, lake_compact
 
     root = str(tmp_path / "t")
@@ -383,6 +384,16 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert got.where(F.col("score") == 0.5).count() == 4
     # time travel returns the pre-evolution schema exactly
     assert "score" not in lake_read(spark, root, version=1).columns
+    # scans that skip down to pre-evolution files keep the table schema
+    from pyspec_spark.lake import lake_scan, lake_scan_in
+
+    for scan, n in (
+        (lake_scan(spark, root, [("doc_id", "<", 6)]), 6),
+        (lake_scan_in(spark, root, [("doc_id", [0, 1])]), 2),
+    ):
+        assert scan.dtypes == got.dtypes
+        rows = scan.collect()
+        assert len(rows) == n and all(r["score"] is None for r in rows)
 
     # dropping a column is refused
     with pytest.raises(ValueError, match="add-column only"):
@@ -398,6 +409,16 @@ def test_schema_evolution_add_column(spark, tmp_path):
     got2 = lake_read(spark, root)
     assert got2.where(F.col("score").isNull()).count() == 6
     assert sorted(got2.columns) == sorted(got.columns)
+
+    # replacing one partition with an added column records the wider
+    # schema and marks the carried-over partitions as mixed
+    from pyspec_spark.lake import lake_replace_partitions
+
+    wider = got2.where("part = 0").withColumn("rank", F.lit(1))
+    v = lake_replace_partitions(spark, root, {"0"}, wider, "part")
+    m = _load_manifest(root, v)
+    assert "rank" in m["schema"] and m["schema_mixed"] is True
+    assert lake_read(spark, root).where(F.col("rank").isNull()).count() == 6
 
 
 def test_upsert_and_delete_after_zorder_compaction(spark, tmp_path):
@@ -2036,6 +2057,41 @@ def test_atomic_publish_lives_only_in_lake_primitives():
                     hits.append((path, ln))
     assert len(hits) == 2
     assert set(hits) <= allowed, sorted(set(hits) - allowed)
+
+
+def test_column_mapping_lives_only_in_read_and_stage_helpers():
+    """The column mapping is known in two places: ``_read_files`` is the
+    only caller of ``_read_mapped`` and ``_stage`` the only caller of
+    ``_stage_mapped_append``, so no lake op forks on it; the per-op
+    readers and the latest-manifest schema check are gone."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pyspec_spark",
+    )
+    callers: dict[str, list[str]] = {}
+    defined: set[str] = set()
+    for dirpath, _, names in os.walk(pkg):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            src = open(os.path.join(dirpath, name)).read()
+            if not any(n in src for n in ("_read_", "_stage", "_check_schema")):
+                continue
+            for fn in ast.walk(ast.parse(src)):
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                defined.add(fn.name)
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call) and isinstance(
+                        node.func, (ast.Name, ast.Attribute)
+                    ):
+                        callee = getattr(node.func, "id", None) or node.func.attr
+                        callers.setdefault(callee, []).append(fn.name)
+    assert callers["_read_mapped"] == ["_read_files"]
+    assert callers["_stage_mapped_append"] == ["_stage"]
+    assert not {"_check_schema_evolution", "_read_entries"} & defined
 
 
 def _file_blooms_per_value(path, cols):

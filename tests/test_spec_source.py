@@ -197,7 +197,8 @@ def test_native_parse_matches_spec_format(registered, tmp_path):
     MCA chains, CRLF/CR/form-feed breaks, tabs, non-float rows, duplicate
     labels, no #L, non-numbered #S lines, no header, a one-digit #D day,
     an impossible date, aborted and duplicate scans, invalid UTF-8, and
-    a file name with glob and URL characters."""
+    a file name with glob and URL characters.  A hidden file name is
+    refused, not read as empty."""
     from pyspec_spark.sources.spec_datasource import _scan_rows, read_spec
     from pyspec_spark.sources.spec_format import index_scans, parse_file_header
 
@@ -222,6 +223,13 @@ def test_native_parse_matches_spec_format(registered, tmp_path):
     with pytest.raises(Exception, match="not a scan block"):
         read_spec(registered, str(bad)).collect()
     assert len(read_spec(registered, str(bad), scans=[1]).collect()) == 1
+    # Spark skips `_`/`.` names even when named: naming one (or globbing
+    # it) raises instead of reading empty; a directory listing skips it
+    (bad.parent / "_hidden.spec").write_text("#S 1 ascan\n1 2\n")
+    for named in ("_hidden.spec", "*.spec"):
+        with pytest.raises(ValueError, match="_hidden.spec"):
+            read_spec(registered, str(bad.parent / named))
+    assert len(read_spec(registered, str(bad.parent), scans=[1]).collect()) == 1
 
 
 def test_batch_reads_plan_no_python_node(registered, spec_dir):
