@@ -36,7 +36,10 @@ table.  This module closes that caveat with the table-format recipe
 
 At 100 TB this is exactly the metadata/data split that makes object-
 store lakes workable: planning reads one small JSON (file listing +
-partition values — no directory walks), data files are written once
+partition values — no directory walks), and a read plan takes its
+schema from that manifest (``_parquet``), so building it opens no
+data file and, up to Spark's parallel-listing threshold of files,
+starts no Spark job.  Data files are written once
 and cached aggressively, and maintenance (vacuum) is a pure metadata
 diff.  The local-FS ``os.link`` commit generalizes to any store with
 a conditional-put primitive.
@@ -68,6 +71,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
 import urllib.parse
 import uuid
@@ -317,9 +321,10 @@ def _commit(
         carried[qname] = batch_id
     # schema_mixed: do the LIVE files span more than one writer schema?
     # True only while parent files carry over across an add-column
-    # evolution; a full rewrite (overwrite/compact) resets it.  Gates
-    # _read_files' mergeSchema so the homogeneous path never pays the
-    # every-footer merge.
+    # evolution; a full rewrite (overwrite/compact) resets it.  Reads
+    # take the recorded schema either way; the flag gates mergeSchema
+    # only on _parquet's footer fallback, and _ensure_mapping (and
+    # older readers of the same root) still rely on it.
     mixed = False if schema_mixed is _UNSET else bool(schema_mixed)
     if schema_mixed is _UNSET and retains_parent and parent is not None:
         mixed = bool(pm.get("schema_mixed")) or (
@@ -695,26 +700,85 @@ def _read_files(
 ) -> DataFrame:
     """The one way entries of manifest ``m`` become a DataFrame, with
     ``m``'s logical schema whichever of its files they are.  A mapped
-    table reads through its column mapping (``_read_mapped``).  Files
-    spanning an add-column evolution (``schema_mixed``) merge footers,
-    and a recorded column that none of the entries holds reads as a
-    typed NULL, the rule ``_read_mapped`` applies to eras.  Otherwise
-    this is a plain parquet read of the listed files."""
+    table reads through its column mapping (``_read_mapped``).
+    Otherwise this is a ``_parquet`` read of the listed files with the
+    recorded schema, so a recorded column that none of the entries
+    holds reads as a typed NULL, the rule ``_read_mapped`` applies to
+    eras."""
     if not entries:
         raise ValueError(f"version {m['version']} of {root} is empty")
     if m.get("columns"):
         return _read_mapped(spark, root, m, entries)
     paths = [os.path.join(root, e["path"]) for e in entries]
-    if not m.get("schema_mixed"):
+    return _parquet(
+        spark, paths, m.get("schema"), merge=bool(m.get("schema_mixed"))
+    )
+
+
+# Type atoms whose ``simpleString`` is also their exact DDL, inside any
+# array<>/map<> nesting; decimal(p,s) is folded to "decimal" first.
+_DDL_ATOMS = frozenset({
+    "boolean", "tinyint", "smallint", "int", "bigint", "float", "double",
+    "decimal", "string", "binary", "date", "timestamp", "timestamp_ntz",
+})
+_DECIMAL = re.compile(r"decimal\(\d+,\d+\)")
+_TYPE_SPLIT = re.compile(r"array<|map<|[<>,]")
+
+
+def _ddl(fields: dict | None) -> str | None:
+    """``fields`` ({name: simpleString}) as a read schema, or None when
+    a type string cannot say its type exactly."""
+    if not fields:
+        return None
+    for t in fields.values():
+        atoms = _TYPE_SPLIT.split(_DECIMAL.sub("decimal", t))
+        if not all(a in _DDL_ATOMS for a in atoms if a):
+            return None
+    return ", ".join(
+        "`{}` {}".format(n.replace("`", "``"), t) for n, t in fields.items()
+    )
+
+
+def _parquet(
+    spark: SparkSession, paths: list[str], fields: dict | None,
+    merge: bool = False,
+) -> DataFrame:
+    """The one parquet read of data files, with the schema the manifest
+    recorded for them (``fields``, {name: type}): building the read
+    infers nothing from the files, the columns come in recorded order,
+    and a recorded column a file lacks (an add-column evolution) reads
+    as NULL.  It starts no Spark job unless ``paths`` outnumber
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 by
+    default), above which Spark lists them with one.
+
+    It falls back to inferring the schema from the file footers, with
+    ``merge`` (the manifest is ``schema_mixed``) merging every footer
+    and projecting to ``fields``, when the record cannot be rendered as
+    an exact read schema:
+
+    - no recorded schema (a manifest older than schema tracking);
+    - a ``struct<`` type: ``simpleString`` leaves nested field names
+      unquoted, so a name with a space, comma or colon misparses;
+    - a user-defined type: Python UDTs render as ``"udt"`` (ML vectors
+      as ``"vector"``), which names no storage type;
+    - ``char(n)`` / ``varchar(n)``: Spark refuses them in a read schema
+      (``UNSUPPORTED_CHAR_OR_VARCHAR_AS_STRING``), while the footer
+      read keeps them;
+    - any other type not built from ``_DDL_ATOMS`` (intervals, variant,
+      collated strings), which no test pins to a rendering."""
+    ddl = _ddl(fields)
+    if ddl is not None:
+        return spark.read.schema(ddl).parquet(*paths)
+    if not merge:
         return spark.read.parquet(*paths)
     df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    have, schema = df.columns, m.get("schema") or {}
+    have, fields = df.columns, fields or {}
     return df.select(
         *[
             F.col(c) if c in have else F.lit(None).cast(t).alias(c)
-            for c, t in schema.items()
+            for c, t in fields.items()
         ],
-        *[c for c in have if c not in schema],
+        *[c for c in have if c not in fields],
     )
 
 
@@ -788,7 +852,7 @@ def lake_upsert(
         merged = updates
         if touched:
             survivors = _read_files(spark, root, m, touched).join(
-                updates.select(key).distinct(), key, "left_anti"
+                updates.select(key), key, "left_anti"
             )
             # missing-on-either-side columns fill with NULL: updates may
             # ADD columns (evolution); it may not drop any (checked above)
@@ -871,7 +935,7 @@ def lake_delete(
         prev, m = _parent(root)
         if prev is None:
             return 0
-        keys = delete_keys.select(key).distinct()
+        keys = delete_keys.select(key)
         if partition_col in delete_keys.columns:
             parts = _spark_part_strings(delete_keys, partition_col)
         else:
@@ -913,17 +977,11 @@ def lake_compact(
     prev = latest_version(root)
     cl = _load_manifest(root, prev).get("cluster_col") if prev else None
     cur = lake_read(spark, root, version=prev)
-    if partition_col is not None:
-        new = _stage_files(
-            spark, root, cur.repartition(F.col(partition_col)),
-            partition_col, bloom_cols=bloom_cols, cluster_col=cl,
-        )
-    elif cl is not None:
-        new = _stage_files(spark, root, cur, None,
-                           bloom_cols=bloom_cols, cluster_col=cl)
-    else:
-        new = _stage_files(spark, root, cur.coalesce(1), None,
-                           bloom_cols=bloom_cols)
+    # _stage_files' own repartition by the hive columns is the one
+    # shuffle; with none, one task writes the single output file
+    staged = cur if partition_col or cl else cur.coalesce(1)
+    new = _stage_files(spark, root, staged, partition_col,
+                       bloom_cols=bloom_cols, cluster_col=cl)
     return _commit(
         root, "compact", new, partition_col, prev,
         schema=_schema_fields(cur), retains_parent=False,
@@ -941,8 +999,6 @@ def lake_change_layout(
     until vacuumed."""
     prev = latest_version(root)
     cur = lake_read(spark, root, version=prev)
-    if partition_col is not None:
-        cur = cur.repartition(F.col(partition_col))
     new = _stage_files(spark, root, cur, partition_col)
     # a layout migration REDEFINES the at-rest keys: the new files are
     # not cluster-split, so the inherited cluster_col must not survive
@@ -1474,10 +1530,11 @@ def lake_compact_zorder(
 
 # ---------------------------------------------------------------------------
 # Schema evolution (add-column).  The manifest records each commit's
-# writer schema; _read_files turns on parquet schema merging ONLY when
-# the live files actually disagree (mergeSchema reads every footer —
-# needless cost on the common homogeneous path).  Old files simply
-# lack the new column and read as NULL, whichever files a scan keeps;
+# writer schema and reads use it as their read schema, so old files
+# simply lack the new column and read as NULL, whichever files a scan
+# keeps.  Parquet schema merging (mergeSchema reads every footer) is
+# only _parquet's fallback for a schema it cannot render, and only
+# when the live files actually disagree (``schema_mixed``);
 # time travel to a pre-evolution version returns the old schema
 # exactly.  Column REMOVAL or type narrowing is refused — at 100 TB a
 # silent incompatible append is a corpus-wide poisoning, so the check
@@ -1638,7 +1695,8 @@ def lake_diff(
 #   current ordinals, physical = current names, every live file
 #   stamped era 0); unmapped tables behave exactly as before;
 # - mapped READS project each era physical→logical with casts and
-#   union the eras — one narrow select per era, no mergeSchema;
+#   union the eras — one narrow select per era, each read with its
+#   era's recorded physical schema, no mergeSchema;
 # - staging translates logical→physical and stamps the current era
 #   (allocating a new era after a retype), so row-level rewrites splice
 #   the caller's logical rows with survivors read in the logical view;
@@ -1769,7 +1827,8 @@ def _read_mapped(
     spark: SparkSession, root: str, m: dict, entries: list[dict]
 ) -> DataFrame:
     """Project file entries through the manifest's column mapping:
-    group by schema era, read each era plainly, select physical →
+    group by schema era, read each era with its recorded physical
+    schema (``m["schemas"][sid]``), select physical →
     logical (cast to the CURRENT logical type; columns a file's era
     predates read as typed NULLs), union the eras."""
     mapping = m["columns"]
@@ -1787,7 +1846,8 @@ def _read_mapped(
         phys = schemas.get(str(sid))
         if phys is None:
             raise ValueError(f"unknown schema era {sid} under {root}")
-        df = spark.read.parquet(*[os.path.join(root, e["path"]) for e in es])
+        paths = [os.path.join(root, e["path"]) for e in es]
+        df = _parquet(spark, paths, phys)
         proj = [
             (
                 F.col(c["physical"]).cast(c["type"])

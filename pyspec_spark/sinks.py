@@ -162,7 +162,7 @@ def merge_upsert(
     """Hive-style MERGE (upsert) into a partitioned parquet directory
     WITHOUT a table format: rows in `updates` replace target rows with
     the same `key`; new keys append — and ONLY the partitions that
-    contain updated keys are rewritten (r5).
+    contain updated keys are rewritten.
 
     How the pruning works: the update set's distinct partition values
     select which target partitions participate (partition-pruned read);
@@ -197,8 +197,7 @@ def merge_upsert(
         target = spark.read.parquet(target_dir).where(
             F.col(partition_col).isin(parts)
         )
-        upd_keys = updates.select(key).distinct()
-        kept = target.join(upd_keys, key, "left_anti")
+        kept = target.join(updates.select(key), key, "left_anti")
         merged = kept.unionByName(updates.select(*kept.columns))
         with _dynamic_overwrite(spark):
             (
@@ -219,10 +218,10 @@ def merge_delete(
     partition_col: str,
 ) -> int:
     """Row-level DELETE from a partitioned parquet directory — the
-    right-to-be-forgotten pass merge_upsert's docstring declared out of
-    scope, closed in r6.  Rows whose ``key`` appears in ``delete_keys``
-    are removed; only partitions actually containing such keys are
-    rewritten.  Returns the number of partitions rewritten or removed.
+    right-to-be-forgotten pass merge_upsert does not cover.  Rows whose
+    ``key`` appears in ``delete_keys`` are removed; only partitions
+    actually containing such keys are rewritten.  Returns the number of
+    partitions rewritten or removed.
 
     Partition discovery: if ``delete_keys`` carries ``partition_col``,
     those values prune directly (zero extra scans — the caller knew the
@@ -239,9 +238,9 @@ def merge_delete(
     import shutil as _shutil
 
     # Fail-fast BEFORE any mutation (same up-front policy as
-    # compact_small_files; the r6 review caught the first cut guarding
-    # only at the emptied-partition step, after partitions had already
-    # been rewritten — a half-applied delete on object storage).
+    # compact_small_files): a guard at the emptied-partition step would
+    # fire after partitions had already been rewritten — a half-applied
+    # delete on object storage.
     if "://" in target_dir and not target_dir.startswith("file://"):
         raise ValueError(
             f"merge_delete is local-filesystem only, got {target_dir} — "
@@ -259,7 +258,7 @@ def merge_delete(
                 r[0]
                 for r in spark.read.parquet(target_dir)
                 .select(key, partition_col)
-                .join(delete_keys.select(key).distinct(), key, "left_semi")
+                .join(delete_keys.select(key), key, "left_semi")
                 .select(partition_col)
                 .distinct()
                 .collect()
@@ -270,7 +269,7 @@ def merge_delete(
             F.col(partition_col).isin(parts)
         )
         kept = target.join(
-            delete_keys.select(key).distinct(), key, "left_anti"
+            delete_keys.select(key), key, "left_anti"
         ).persist()
         try:
             kept_parts = {

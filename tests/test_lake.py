@@ -1913,6 +1913,96 @@ def test_restore_preserves_schema_era(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# Read plans take their schema from the manifest.
+# ---------------------------------------------------------------------------
+def test_building_lake_reads_runs_zero_jobs(spark, tmp_path):
+    """Building a read plan opens no data file: the schema comes from
+    the manifest, so no footer-inference job runs for a plain table,
+    an add-column (schema_mixed) table or a renamed (mapped) one."""
+    from pyspec_spark.lake import lake_rename_column, lake_scan, lake_scan_in
+
+    plain, mixed, mapped = (str(tmp_path / n) for n in ("p", "x", "m"))
+    for root in (plain, mixed, mapped):
+        lake_append(spark, root, _docs(spark, 0, 6), "part")
+    lake_append(
+        spark, mixed, _docs(spark, 6, 9).withColumn("score", F.lit(0.5)), "part"
+    )
+    lake_rename_column(mapped, "text", "body")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    built = {
+        root: [
+            lake_read(spark, root),
+            lake_scan(spark, root, [("doc_id", "<", 3)]),
+            lake_scan(spark, root, [("doc_id", ">", 99)]),  # empty kept
+            lake_scan_in(spark, root, [("doc_id", [1, 2])]),
+        ]
+        for root in (plain, mixed, mapped)
+    }
+    assert not set(tracker.getJobIdsForGroup(None)) - before
+    cols = {
+        plain: ["doc_id", "text", "part"],
+        mixed: ["doc_id", "text", "part", "score"],
+        mapped: ["doc_id", "body", "part"],
+    }
+    for root, dfs in built.items():
+        assert all(df.columns == cols[root] for df in dfs)
+
+
+def test_struct_column_reads_through_footer_fallback(spark, tmp_path):
+    """A struct type string cannot be a read schema (its field names are
+    unquoted), so such a table keeps the footer read, merged across an
+    add-column evolution: it reads back equal to its input, NULL where
+    the added column is missing."""
+    from pyspec_spark.lake import _ddl, _load_manifest
+
+    def rows(lo, hi):
+        return _docs(spark, lo, hi).withColumn(
+            "st", F.struct(F.col("doc_id").alias("a b"), F.col("text"))
+        )
+
+    root = str(tmp_path / "t")
+    lake_append(spark, root, rows(0, 6), "part")
+    lake_append(spark, root, rows(6, 9).withColumn("n", F.lit(7)), "part")
+    m = _load_manifest(root, 2)
+    assert m["schema_mixed"] and _ddl(m["schema"]) is None
+    got = lake_read(spark, root)
+    assert got.columns == ["doc_id", "text", "part", "st", "n"]
+    assert sorted(
+        (r["doc_id"], r["st"]["a b"], r["st"]["text"], r["n"])
+        for r in got.collect()
+    ) == [(i, i, f"text-a-{i}", 7 if i >= 6 else None) for i in range(9)]
+
+
+def test_compaction_stages_with_one_exchange(spark, tmp_path, monkeypatch):
+    """lake_compact and lake_change_layout shuffle once: _stage_files'
+    repartition by the hive column is the only exchange of the staged
+    plan, and each partition value still lands in one file."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from pyspec_spark.lake import _load_manifest, lake_change_layout
+    from pyspec_spark.plans import count_exchanges
+
+    root = str(tmp_path / "t")
+    lake_append(spark, root, _docs(spark, 0, 6), "part")
+    lake_append(spark, root, _docs(spark, 6, 12), "part")
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    v = lake_compact(spark, root, "part")
+    assert len(_load_manifest(root, v)["files"]) == 3
+    v = lake_change_layout(spark, root, "part")
+    assert len(_load_manifest(root, v)["files"]) == 3
+    assert [count_exchanges(p) for p in plans] == [1, 1]
+    assert _rows(lake_read(spark, root)) == _rows(_docs(spark, 0, 12))
+
+
+# ---------------------------------------------------------------------------
 # The publish primitives (Spark-free: plain files, milliseconds).
 # ---------------------------------------------------------------------------
 def _no_tmp_left(d):
@@ -2092,6 +2182,41 @@ def test_column_mapping_lives_only_in_read_and_stage_helpers():
     assert callers["_read_mapped"] == ["_read_files"]
     assert callers["_stage_mapped_append"] == ["_stage"]
     assert not {"_check_schema_evolution", "_read_entries"} & defined
+
+
+def test_parquet_reads_live_only_in_one_helper():
+    """Every parquet read in lake.py goes through ``_parquet``, the one
+    place that turns the manifest's schema into the read schema, so no
+    op can bring back a footer-inference read of its own."""
+    import ast
+
+    lake_py = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pyspec_spark",
+        "lake.py",
+    )
+
+    def chain(node):
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                yield node.attr
+                node = node.value
+            else:
+                node = node.func
+
+    reads = {}
+    for fn in ast.walk(ast.parse(open(lake_py).read())):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and "write" not in chain(node.func.value)
+            ):
+                reads.setdefault(fn.name, []).append(node.lineno)
+    assert set(reads) == {"_parquet"}, reads
 
 
 def _file_blooms_per_value(path, cols):
