@@ -1,12 +1,15 @@
 """Snapshot lake — manifest-versioned parquet tables (time travel,
 ACID-ish commits, file-level partition pruning).
 
-The in-place lake ops in sinks.py (merge_upsert / merge_delete /
-compact_small_files) document a shared caveat: dynamic partition
-overwrite mutates the directory, so a crash mid-write can leave
-half-rewritten partitions and there is no way to read yesterday's
-table.  This module closes that caveat with the table-format recipe
-(the public Iceberg/Delta core idea, re-expressed minimally):
+Every versioned write in the engine — appends, upserts, deletes,
+compaction, layout changes, streaming sinks such as
+``streaming/corpus.curate_to_lake`` — is a commit here.  An in-place
+rewrite of a parquet directory (dynamic partition overwrite) mutates
+what readers are reading, so a crash mid-write can leave half-rewritten
+partitions and there is no way to read yesterday's table; the engine's
+one such rewrite is ``sinks.merge_upsert``, for callers that want a
+plain hive directory.  This module is the table-format recipe (the public
+Iceberg/Delta core idea, re-expressed minimally):
 
 - **Data files are immutable.**  Every commit writes NEW parquet files
   under ``<root>/data/c{version}-{uuid}/`` and never touches existing

@@ -15,11 +15,16 @@ keep it the coarse axis (hundreds of dirs), never a high-cardinality key
 (millions of tiny files is the classic parquet-lake failure).  Writers
 coalesce small outputs so local runs don't emit one file per shuffle
 partition.
+
+These are plain, unversioned writes.  Data that is updated, deleted or
+compacted after it lands belongs in the manifest lake (``lake.py``:
+``lake_upsert``, ``lake_delete``, ``lake_compact``), whose every write
+is an atomic snapshot commit.  ``merge_upsert`` is the one in-place
+rewrite here, for callers that need a plain hive directory as output.
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -143,7 +148,7 @@ def write_zordered(
 @contextmanager
 def _dynamic_overwrite(spark: SparkSession):
     """Scoped spark.sql.sources.partitionOverwriteMode=dynamic (saved
-    and restored) — shared by merge_upsert and compact_small_files."""
+    and restored) for merge_upsert's write."""
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -175,12 +180,13 @@ def merge_upsert(
     the plain-parquet equivalent of a table format's MERGE, minus
     row-level deletes.
 
-    Caveats (documented, not hidden): no ACID — a crash mid-write can
-    leave the overwritten partitions partially rewritten (a table
-    format or a staging-dir swap adds atomicity); updates whose key
-    MOVES to a different partition value upsert into the new partition
-    but do not delete the old row (key+partition should be stable, the
-    normal layout discipline)."""
+    Caveats (documented, not hidden): no ACID and no history — a crash
+    mid-write can leave the overwritten partitions partially rewritten,
+    and a concurrent reader can see a partition mid-rewrite (use
+    ``lake.lake_upsert`` for an atomic, versioned upsert); updates
+    whose key MOVES to a different partition value upsert into the new
+    partition but do not delete the old row (key+partition should be
+    stable, the normal layout discipline)."""
     # Materialize updates ONCE: its lineage is consumed by three jobs
     # (partition collect, anti-join, final write).  Without the persist
     # a non-deterministic lineage (sample/limit/now()) could emit a row
@@ -208,155 +214,3 @@ def merge_upsert(
             )
     finally:
         updates.unpersist()
-
-
-def merge_delete(
-    spark: SparkSession,
-    target_dir: str,
-    delete_keys: DataFrame,
-    key: str,
-    partition_col: str,
-) -> int:
-    """Row-level DELETE from a partitioned parquet directory — the
-    right-to-be-forgotten pass merge_upsert does not cover.  Rows whose
-    ``key`` appears in ``delete_keys`` are removed; only partitions
-    actually containing such keys are rewritten.  Returns the number of
-    partitions rewritten or removed.
-
-    Partition discovery: if ``delete_keys`` carries ``partition_col``,
-    those values prune directly (zero extra scans — the caller knew the
-    layout).  Otherwise one column-pruned scan of (key, partition) over
-    the target locates affected partitions — unavoidable without a
-    key→partition index, and still reads two columns, not the table.
-
-    A partition whose every row is deleted needs special handling:
-    dynamic partition overwrite only replaces partitions PRESENT in the
-    written DataFrame, so an emptied partition would silently keep its
-    old files.  Those directories are removed explicitly (local-FS
-    guard, same policy as compact_small_files).  Same no-ACID caveat as
-    merge_upsert."""
-    import shutil as _shutil
-
-    # Fail-fast BEFORE any mutation (same up-front policy as
-    # compact_small_files): a guard at the emptied-partition step would
-    # fire after partitions had already been rewritten — a half-applied
-    # delete on object storage.
-    if "://" in target_dir and not target_dir.startswith("file://"):
-        raise ValueError(
-            f"merge_delete is local-filesystem only, got {target_dir} — "
-            "on object storage use a table format's DELETE"
-        )
-    delete_keys = delete_keys.persist()
-    try:
-        if partition_col in delete_keys.columns:
-            parts = [
-                r[0]
-                for r in delete_keys.select(partition_col).distinct().collect()
-            ]
-        else:
-            parts = [
-                r[0]
-                for r in spark.read.parquet(target_dir)
-                .select(key, partition_col)
-                .join(delete_keys.select(key), key, "left_semi")
-                .select(partition_col)
-                .distinct()
-                .collect()
-            ]
-        if not parts:
-            return 0
-        target = spark.read.parquet(target_dir).where(
-            F.col(partition_col).isin(parts)
-        )
-        kept = target.join(
-            delete_keys.select(key), key, "left_anti"
-        ).persist()
-        try:
-            kept_parts = {
-                r[0] for r in kept.select(partition_col).distinct().collect()
-            }
-            with _dynamic_overwrite(spark):
-                (
-                    kept.repartition(partition_col)
-                    .write.mode("overwrite")
-                    .partitionBy(partition_col)
-                    .parquet(target_dir)
-                )
-        finally:
-            kept.unpersist()
-        emptied = [p for p in parts if p not in kept_parts]
-        if emptied:
-            for p in emptied:
-                d = os.path.join(
-                    target_dir.removeprefix("file://"),
-                    f"{partition_col}={p}",
-                )
-                if os.path.isdir(d):
-                    _shutil.rmtree(d)
-        return len(parts)
-    finally:
-        delete_keys.unpersist()
-
-
-def compact_small_files(
-    spark: SparkSession,
-    target_dir: str,
-    partition_col: str | None = None,
-    files_per_partition: int = 1,
-) -> int:
-    """Small-file compaction — the maintenance pass every long-running
-    parquet lake needs (each streaming micro-batch / incremental merge
-    leaves small files; scan cost grows with file COUNT, not bytes).
-    Rewrites the directory so each partition holds AT MOST
-    `files_per_partition` files (a hash-salt spreads each partition's
-    rows over that many write tasks; hash collisions can merge some).
-    Returns the file count before compaction.
-
-    LOCAL-FILESYSTEM ONLY (explicitly guarded): the file census and the
-    unpartitioned staging swap use local-FS primitives.  A lake on
-    object storage wants a table format's rewrite action instead; this
-    operator exists for the local/NFS layouts the rest of sinks.py
-    writes.  Same dynamic-overwrite caveats as merge_upsert."""
-    import glob as _glob
-    import os as _os
-
-    if "://" in target_dir and not target_dir.startswith("file://"):
-        raise ValueError(
-            f"compact_small_files is local-filesystem only, got {target_dir}"
-        )
-    before = len(
-        _glob.glob(
-            _os.path.join(target_dir, "**", "*.parquet"), recursive=True
-        )
-    )
-    df = spark.read.parquet(target_dir)
-    if partition_col is None:
-        df.coalesce(files_per_partition).write.mode("overwrite").parquet(
-            target_dir + "__compact"
-        )
-        # swap order keeps a complete copy on disk at every instant:
-        # a crash leaves either <dir>.old or <dir>__compact recoverable
-        import shutil as _shutil
-
-        _os.rename(target_dir, target_dir + ".old")
-        _os.rename(target_dir + "__compact", target_dir)
-        _shutil.rmtree(target_dir + ".old")
-    else:
-        n_parts = df.select(partition_col).distinct().count()
-        salt = F.pmod(
-            F.hash(*[F.col(c) for c in df.columns]), F.lit(files_per_partition)
-        )
-        with _dynamic_overwrite(spark):
-            (
-                df.withColumn("_salt", salt)
-                .repartition(
-                    max(n_parts * files_per_partition, 1),
-                    F.col(partition_col),
-                    F.col("_salt"),
-                )
-                .drop("_salt")
-                .write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(target_dir)
-            )
-    return before

@@ -1,5 +1,5 @@
 """Incremental corpus curation over Structured Streaming — SURVEY.md
-§2.10/§2.12 (r4).
+§2.10/§2.12.
 
 A training-data pipeline rarely sees its corpus at once: crawl output
 lands in batches.  Every map-only curation stage (quality signals,
@@ -72,7 +72,7 @@ def dedup_stream(docs: DataFrame) -> DataFrame:
 
 
 def hash_embed_stream(docs: DataFrame, dim: int = 16) -> DataFrame:
-    """Streaming feature-hash embedding state (r5): the per-(doc_id,
+    """Streaming feature-hash embedding state: the per-(doc_id,
     bucket) signed counts of `operators/text.py feature_hash_embed`,
     expressed as a streaming aggregation.  Because the bucket sums are
     plain SUMs, the state is MERGEABLE — each micro-batch folds its
@@ -146,8 +146,8 @@ def neardup_stream(
     shingle_k: int = 2,
     ttl_minutes: float | None = None,
 ) -> DataFrame:
-    """Cross-batch NEAR-duplicate suppression over a document stream
-    (r6): MinHash-banded LSH with keyed state per (band, band_hash)
+    """Cross-batch NEAR-duplicate suppression over a document stream:
+    MinHash-banded LSH with keyed state per (band, band_hash)
     bucket — the incremental-ingestion complement of dedup_stream's
     exact-hash dedup.
 
@@ -206,8 +206,8 @@ def neardup_stream(
         # (out-of-order replay), ownership TRANSFERS: the newcomer is
         # kept and the displaced former owner is emitted as the dup —
         # the append-mode correction for late-arriving information.
-        # (The r6 code-review caught the inverted first cut, which
-        # flagged the newcomer and never re-flagged the old owner.)
+        # Flagging the newcomer instead would never re-flag the old
+        # owner.
         seen = batch | ({prev} if prev is not None else set())
         owner = min(seen)
         if owner != prev:
@@ -252,76 +252,43 @@ def curate_to_lake(
     spark: SparkSession,
     target_dir: str,
     min_quality: float = 0.5,
-    compact_every: int = 2,
-    files_per_partition: int = 1,
     checkpoint: str | None = None,
 ) -> None:
-    """The production WRITE path of incremental curation (r6 VERDICT
-    #7): each micro-batch of curated documents is MERGE-upserted into a
-    lang-partitioned parquet lake (sinks.merge_upsert — only partitions
-    containing updated keys are rewritten, dynamic partition
-    overwrite), and every ``compact_every`` batches the lake is
-    compacted (sinks.compact_small_files) so streaming ingestion does
-    not accrete one small file per batch per partition — scan cost
-    grows with file COUNT, not bytes, and at 100 TB an uncompacted
-    month of micro-batches is the classic lake-killer.
+    """The production WRITE path of incremental curation: each
+    micro-batch that curates to at least one row is one
+    ``lake.lake_upsert`` into a lang-partitioned manifest lake at
+    ``target_dir``, keyed by doc_id.  A batch that curates to nothing
+    publishes no version.
 
-    Re-delivered doc_ids (crawl re-fetches) UPDATE in place rather than
-    duplicating — the exactly-once-per-key semantics an append sink
-    cannot give.  Runs with availableNow and blocks until drained; the
-    integration test asserts end-state equality with the batch curate()
-    over the same documents, the post-compaction file-count bound, and
-    file-identity on partitions a later merge does not touch."""
-    import os as _os
+    Every batch is an atomic snapshot commit: a concurrent reader sees
+    the previous version or the new one, never a half-written
+    partition.  Only the langs a batch touches are rewritten, each as
+    one file (the stager splits files by partition value), so the live
+    table holds one file per lang and needs no compaction pass; every
+    other lang's files carry over by reference.  Re-delivered doc_ids
+    (crawl re-fetches) UPDATE in place rather than duplicating — the
+    exactly-once-per-key semantics an append sink cannot give.
 
-    from pyspec_spark.sinks import compact_small_files, merge_upsert
+    Readers use ``lake.lake_read`` (the directory holds every version's
+    files, so a plain parquet read of it is wrong).  Old versions stay
+    readable until vacuumed; ``lake.lake_vacuum`` retention is the
+    caller's to run.  Runs with availableNow and blocks until drained."""
+    from pyspec_spark.lake import lake_upsert
 
     curated = curate(stream, min_quality=min_quality)
 
-    import glob as _glob
-
-    def _has_data(d: str) -> bool:
-        # bootstrap must key on actual parquet files, not isdir(): a
-        # first batch that curates to ZERO rows leaves a directory with
-        # only _SUCCESS, and merge_upsert's read on it would fail with
-        # 'unable to infer schema' and kill the stream
-        return bool(
-            _glob.glob(_os.path.join(d, "**", "*.parquet"), recursive=True)
-        )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not _has_data(target_dir):
-            if batch_df.isEmpty():
-                return  # nothing to bootstrap with; wait for real rows
-            # bootstrap: first non-empty batch creates the layout
-            (
-                batch_df.repartition("lang")
-                .write.mode("overwrite")
-                .partitionBy("lang")
-                .parquet(target_dir)
-            )
-        else:
-            merge_upsert(
-                spark, target_dir, batch_df, key="doc_id", partition_col="lang"
-            )
-        if compact_every and batch_id % compact_every == compact_every - 1:
-            compact_small_files(
-                spark,
-                target_dir,
-                partition_col="lang",
-                files_per_partition=files_per_partition,
-            )
+        # an upsert of an empty frame would still commit a version
+        if not batch_df.isEmpty():
+            lake_upsert(spark, target_dir, batch_df, "doc_id", "lang")
 
     writer = curated.writeStream.foreachBatch(sink).outputMode("update")
     if checkpoint:
-        # restart semantics: with a checkpoint, a re-run of the same
-        # source processes ONLY files that arrived since the last run —
-        # already-ingested batches are never replayed into the lake
-        # (merge_upsert makes replays idempotent per key anyway, but
-        # skipping them is what makes incremental ingestion incremental:
-        # a daily 100 TB-lake run must not re-curate the whole crawl).
-        # The restart test pins both halves: no-op on no new data,
-        # delta-only on new chunks, untouched partitions byte-identical.
+        # with a checkpoint, a re-run of the same source processes ONLY
+        # files that arrived since the last run: ingested batches are
+        # never replayed into the lake (the upsert would make a replay
+        # idempotent per key, but a daily run must not re-curate the
+        # whole crawl)
         writer = writer.option("checkpointLocation", checkpoint)
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
@@ -335,8 +302,8 @@ def index_stream_to_buckets(
     checkpoint: str | None = None,
     n_buckets: int | None = None,
 ) -> None:
-    """Streaming face of incremental index maintenance (r10 — L40d
-    tied to the ST9 pattern): each micro-batch of NEW documents is
+    """Streaming face of incremental index maintenance (L40d, the
+    ST9 pattern): each micro-batch of NEW documents is
     tokenized, folded to (doc_id, term, tf) — one groupBy over the
     BATCH, never the corpus — sharded (doc-range shards, gaps relative
     to the shard base) and written term-bucketed under
@@ -355,8 +322,8 @@ def index_stream_to_buckets(
     read_streamed_index) and decode unchanged — rows decode per-row,
     so a term's postings split across base and any number of batch
     roots need no merge.  Periodic compact_streamed_index folds
-    everything into one fresh root (the small-file story, same as
-    curate_to_lake's compact_every)."""
+    everything into one fresh root, so the batch roots do not pile up
+    as small files."""
     from pyspec_spark.operators.text import (
         TERM_INDEX_BUCKETS,
         _term_bucket_col,
@@ -392,8 +359,8 @@ def index_stream_to_buckets(
 def bloom_screen_stream(
     docs: DataFrame, bloom_arr: DataFrame, min_containment: float = 0.6
 ) -> DataFrame:
-    """Benchmark-decontamination screening over a document stream
-    (r5b): per-doc Bloom containment against a PRE-BUILT densified
+    """Benchmark-decontamination screening over a document stream:
+    per-doc Bloom containment against a PRE-BUILT densified
     filter (operators/bloom.bloom_to_array output — built once from
     the static benchmark corpus, exactly the deployment shape: the
     benchmark never streams).
@@ -504,8 +471,8 @@ def maintained_index_stream(
     checkpoint: str | None = None,
     n_buckets: int | None = None,
 ) -> None:
-    """SERVABLE streaming face of the maintained index (r11, L40j tied
-    to the r10 index_stream_to_buckets pattern): each micro-batch lands
+    """SERVABLE streaming face of the maintained index (L40j, the
+    index_stream_to_buckets pattern): each micro-batch lands
     postings AND its documents' length norms + 1-row stats — all
     batch-scoped under ``{inc_path}/batch={batch_id}`` with
     mode=overwrite, so a batch replayed after a crash between the write

@@ -96,9 +96,19 @@ def test_upsert_adds_new_keys(spark, tmp_path):
     assert got.where("text like 'text-u-%'").count() == 15
 
 
-def test_delete_and_emptied_partition(spark, tmp_path):
+def test_delete_and_emptied_partition(spark, tmp_path, monkeypatch):
+    import pyspec_spark.lake as lake_mod
+
     root = str(tmp_path / "t")
     lake_append(spark, root, _docs(spark, 0, 30), "part")
+
+    def paths(v, part):
+        return {
+            e["path"]
+            for e in lake_mod._load_manifest(root, v)["files"]
+            if e["partition"] == part
+        }
+
     # delete every row of partition 1 plus one row of partition 2
     keys = spark.createDataFrame(
         [(i,) for i in range(30) if i % 3 == 1] + [(2,)], ["doc_id"]
@@ -108,8 +118,35 @@ def test_delete_and_emptied_partition(spark, tmp_path):
     got = lake_read(spark, root)
     assert got.where("part = 1").count() == 0
     assert got.count() == 30 - 10 - 1
+    assert not paths(2, "1")  # the emptied partition has no files
+    # the untouched partition carries over by reference
+    assert paths(2, "0") == paths(1, "0")
     # time travel still sees everything
     assert lake_read(spark, root, version=1).count() == 30
+
+    # delete keys carrying the partition column take the direct path:
+    # one read (the touched files' survivors), no discovery scan
+    reads = []
+    real_read_files = lake_mod._read_files
+
+    def spy(spark_, root_, m, entries):
+        reads.append({e["partition"] for e in entries})
+        return real_read_files(spark_, root_, m, entries)
+
+    monkeypatch.setattr(lake_mod, "_read_files", spy)
+    keyed = spark.createDataFrame([(3, 0)], "doc_id long, part int")
+    assert lake_delete(spark, root, keyed, "doc_id", "part") == 3
+    assert reads == [{"0"}]
+    assert paths(3, "2") == paths(2, "2")
+    monkeypatch.undo()
+    got = lake_read(spark, root)
+    assert got.count() == 30 - 10 - 1 - 1
+    assert got.where("doc_id = 3").count() == 0
+
+    # keys found nowhere return the parent version and commit nothing
+    missing = spark.createDataFrame([(999,)], ["doc_id"])
+    assert lake_delete(spark, root, missing, "doc_id", "part") == 3
+    assert latest_version(root) == 3
 
 
 def test_commit_conflict_raises_and_leaves_table_intact(spark, tmp_path):
@@ -702,6 +739,7 @@ def test_compact_rebuilds_blooms_and_stream_append_carries_them(
 
     lake_compact(spark, root, bloom_cols=["doc_id"])
     m2 = _load_manifest(root, latest_version(root))
+    assert len(m2["files"]) == 1  # unpartitioned: one file
     assert all("doc_id" in e.get("bloom", {}) for e in m2["files"])
     assert [r["doc_id"] for r in lake_scan(spark, root, [("doc_id", "=", 137)]).collect()] == [137]
     assert lake_scan(spark, root, [("doc_id", "=", 7777)]).count() == 0
@@ -2147,6 +2185,40 @@ def test_atomic_publish_lives_only_in_lake_primitives():
                     hits.append((path, ln))
     assert len(hits) == 2
     assert set(hits) <= allowed, sorted(set(hits) - allowed)
+
+
+def test_in_place_hive_rewrites_live_only_in_sinks():
+    """Only sinks.py calls merge_upsert or sets partitionOverwriteMode:
+    every other versioned write in the package is a lake commit, so an
+    in-place directory rewrite cannot come back beside the lake."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pyspec_spark",
+    )
+    hits = []
+    for dirpath, _, names in os.walk(pkg):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == os.path.join(pkg, "sinks.py"):
+                continue
+            for node in ast.walk(ast.parse(open(path).read())):
+                if not isinstance(node, ast.Call):
+                    continue
+                callee = getattr(node.func, "id", None) or getattr(
+                    node.func, "attr", None
+                )
+                # a conf.set / .config / writer .option keyed by the mode
+                sets_mode = any(
+                    isinstance(a, ast.Constant)
+                    and isinstance(a.value, str)
+                    and "partitionOverwriteMode" in a.value
+                    for a in node.args
+                )
+                if callee == "merge_upsert" or sets_mode:
+                    hits.append((os.path.relpath(path, pkg), node.lineno))
+    assert not hits, hits
 
 
 def test_column_mapping_lives_only_in_read_and_stage_helpers():

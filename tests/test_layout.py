@@ -232,7 +232,7 @@ def test_zorder_value_bijective_and_matches_reference(spark):
 
 
 # ---------------------------------------------------------------------------
-# Merge-upsert + compaction (r5 sinks).
+# sinks.merge_upsert: the in-place hive-directory upsert.
 # ---------------------------------------------------------------------------
 def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     """Semantics: updated keys replaced, new keys inserted, untouched
@@ -276,128 +276,6 @@ def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     untouched_after = {f: m for f, m in after.items()
                        if "/p=2/" in f or "/p=3/" in f}
     assert untouched_before == untouched_after, "p=2/p=3 were rewritten"
-
-
-def test_compact_small_files(spark, tmp_path):
-    from pyspec_spark.sinks import compact_small_files
-
-    tgt = str(tmp_path / "c")
-    df = spark.createDataFrame(
-        [(i, i % 2) for i in range(100)], "k long, p int"
-    )
-    # deliberately fragmented: many files per partition
-    df.repartition(8).write.partitionBy("p").parquet(tgt)
-    import glob
-    import os
-
-    n0 = len(glob.glob(os.path.join(tgt, "**", "*.parquet"), recursive=True))
-    assert n0 > 4
-    got = compact_small_files(spark, tgt, partition_col="p",
-                              files_per_partition=1)
-    assert got == n0
-    n1 = len(glob.glob(os.path.join(tgt, "**", "*.parquet"), recursive=True))
-    assert n1 == 2  # one file per partition
-    assert spark.read.parquet(tgt).count() == 100
-
-    # unpartitioned path with the staging swap
-    tgt2 = str(tmp_path / "c2")
-    df.repartition(8).write.parquet(tgt2)
-    compact_small_files(spark, tgt2, files_per_partition=1)
-    n2 = len(glob.glob(os.path.join(tgt2, "*.parquet")))
-    assert n2 == 1
-    assert spark.read.parquet(tgt2).count() == 100
-
-
-def test_compact_files_per_partition_honored(spark, tmp_path):
-    """files_per_partition > 1 must actually spread each partition over
-    multiple files (the salt repartition), bounded above by the target
-    — the first-cut repartition(n, col) collapsed everything to 1."""
-    import glob
-    import os
-    from collections import Counter
-
-    from pyspec_spark.sinks import compact_small_files
-
-    tgt = str(tmp_path / "fp")
-    df = spark.createDataFrame(
-        [(i, i % 2) for i in range(10_000)], "k long, p int"
-    )
-    df.repartition(16).write.partitionBy("p").parquet(tgt)
-    compact_small_files(spark, tgt, partition_col="p", files_per_partition=3)
-    per_part = Counter(
-        f.split("/p=")[1].split("/")[0]
-        for f in glob.glob(os.path.join(tgt, "**", "*.parquet"), recursive=True)
-    )
-    assert set(per_part) == {"0", "1"}
-    for p, n in per_part.items():
-        assert 2 <= n <= 3, (p, n)  # spread, bounded by the target
-    assert spark.read.parquet(tgt).count() == 10_000
-
-
-def test_merge_delete_rewrites_only_touched_partitions(spark, tmp_path):
-    """Row-level delete: keys vanish, partitions without deleted keys
-    keep byte-identical files, and a fully-emptied partition's
-    directory is removed (the dynamic-overwrite blind spot)."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pyspec_spark.sinks import merge_delete
-
-    lake = str(tmp_path / "del_lake")
-    df = spark.createDataFrame(
-        [(i, f"p{i % 3}", f"v{i}") for i in range(30)], "k INT, part STRING, v STRING"
-    )
-    df.repartition("part").write.partitionBy("part").parquet(lake)
-
-    def census(skip=None):
-        return {
-            f: (os.stat(f).st_mtime_ns, os.stat(f).st_size)
-            for f in glob.glob(os.path.join(lake, "**", "*.parquet"), recursive=True)
-            if skip is None or f"part={skip}" not in f
-        }
-
-    # delete two keys living in part=p0 (keys 0,3 -> i%3==0)
-    before_untouched = {
-        f: v for f, v in census().items() if "part=p0" not in f
-    }
-    n = merge_delete(
-        spark, lake, spark.createDataFrame([(0,), (3,)], "k INT"), "k", "part"
-    )
-    assert n == 1  # only p0 rewritten
-    got = spark.read.parquet(lake)
-    assert got.count() == 28
-    assert got.where(F.col("k").isin(0, 3)).count() == 0
-    after_untouched = {
-        f: v for f, v in census().items() if "part=p0" not in f
-    }
-    assert after_untouched == before_untouched
-
-    # delete-keys WITH the partition column skip discovery, same result
-    n = merge_delete(
-        spark, lake,
-        spark.createDataFrame([(6, "p0")], "k INT, part STRING"),
-        "k", "part",
-    )
-    assert n == 1
-    assert spark.read.parquet(lake).count() == 27
-
-    # empty out part=p2 entirely -> its directory must disappear
-    p2_keys = [(i,) for i in range(30) if i % 3 == 2]
-    merge_delete(
-        spark, lake, spark.createDataFrame(p2_keys, "k INT"), "k", "part"
-    )
-    remaining = spark.read.parquet(lake)
-    assert remaining.where(F.col("part") == "p2").count() == 0
-    assert not os.path.isdir(os.path.join(lake, "part=p2"))
-    # and unrelated keys survived it all
-    assert remaining.count() == 27 - len(p2_keys)
-
-    # deleting keys that exist nowhere is a no-op
-    assert merge_delete(
-        spark, lake, spark.createDataFrame([(999,)], "k INT"), "k", "part"
-    ) == 0
 
 
 def test_term_bucketed_index_prunes_and_roundtrips(spark, tmp_path):

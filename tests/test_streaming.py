@@ -442,27 +442,41 @@ def test_stream_hash_embed_equals_batch(spark, doc_chunks):
 
 
 # ---------------------------------------------------------------------------
-# r6 VERDICT #7: the production WRITE path — curation stream foreachBatch
-# -> merge_upsert into a lang-partitioned lake + periodic compaction.
+# The production WRITE path: curation stream foreachBatch -> one
+# lake_upsert per non-empty micro-batch into a lang-partitioned
+# manifest lake.
 # ---------------------------------------------------------------------------
+def _lang_entries(root, version, langs):
+    """{path: stats} of the manifest entries whose lang is in ``langs``."""
+    from pyspec_spark.lake import _load_manifest
+
+    return {
+        e["path"]: e["stats"]
+        for e in _load_manifest(root, version)["files"]
+        if e["partition"] in langs
+    }
+
+
 def test_stream_curate_to_lake_merge_upsert(spark, doc_chunks, tmp_path):
-    import glob
+    from collections import Counter
 
     import pyspec_spark.streaming.corpus as sc
-    from pyspec_spark.sinks import merge_upsert
+    from pyspec_spark.lake import (
+        _load_manifest,
+        lake_history,
+        lake_read,
+        lake_upsert,
+        latest_version,
+    )
     from pyspec_spark.tables import table
 
     base, _ = doc_chunks
     lake = str(tmp_path / "curated_lake")
     stream = sc.read_document_stream(spark, base, max_files_per_trigger=1)
-    sc.curate_to_lake(
-        stream, spark, lake, min_quality=0.78, compact_every=2,
-        files_per_partition=1,
-    )
+    sc.curate_to_lake(stream, spark, lake, min_quality=0.78)
 
-    # 1. end-state equality with the batch pipeline (modulo the lang
-    # partition column round-tripping through the directory layout)
-    got = spark.read.parquet(lake)
+    # 1. end-state equality with the batch pipeline
+    got = lake_read(spark, lake)
     want = sc.curate(table(spark, SF, "documents"), min_quality=0.78)
     cols = sorted(want.columns)
     assert sorted(got.columns) == cols
@@ -470,41 +484,40 @@ def test_stream_curate_to_lake_merge_upsert(spark, doc_chunks, tmp_path):
         want.select(*cols), cols
     )
 
-    # 2. file-count bound: 4 micro-batches with compact_every=2 must NOT
-    # leave ~4 files per partition; the final compaction pass ran at
-    # batch 3, so at most files_per_partition + 1 uncompacted batch's
-    # worth per partition remains
-    n_langs = got.select("lang").distinct().count()
-    files = glob.glob(os.path.join(lake, "**", "*.parquet"), recursive=True)
-    assert len(files) <= 2 * n_langs, (len(files), n_langs)
+    # 2. one upsert per micro-batch that curated to at least one row
+    chunks = sorted(os.listdir(base))
+    n_nonempty = sum(
+        not sc.curate(
+            spark.read.schema(sc.DOC_SCHEMA).parquet(os.path.join(base, c)),
+            min_quality=0.78,
+        ).isEmpty()
+        for c in chunks
+    )
+    assert n_nonempty >= 2
+    assert [h["op"] for h in lake_history(lake)] == ["upsert"] * n_nonempty
 
-    # 3. a later merge touching ONE lang leaves every other partition's
-    # files byte-identical (path + mtime + size)
+    # 3. the latest manifest holds exactly one file per lang: each
+    # upsert stages every lang it touches as one file, no compaction
     langs = sorted(r.lang for r in got.select("lang").distinct().collect())
     assert len(langs) >= 2
-    touched, untouched = langs[0], langs[1:]
+    v = latest_version(lake)
+    per_lang = Counter(e["partition"] for e in _load_manifest(lake, v)["files"])
+    assert per_lang == Counter(langs)
 
-    def census(skip_lang):
-        out = {}
-        for f in glob.glob(
-            os.path.join(lake, "**", "*.parquet"), recursive=True
-        ):
-            if f"lang={skip_lang}" not in f:
-                st = os.stat(f)
-                out[f] = (st.st_mtime_ns, st.st_size)
-        return out
-
-    before = census(touched)
+    # 4. a later upsert touching ONE lang carries every other lang's
+    # manifest entries (path and stats) over unchanged
+    touched, untouched = langs[0], set(langs[1:])
+    before = _lang_entries(lake, v, untouched)
     upd = (
         got.where(F.col("lang") == touched)
         .limit(5)
         .withColumn("quality", F.lit(0.999))
     )
-    merge_upsert(spark, lake, upd, key="doc_id", partition_col="lang")
-    assert census(touched) == before  # untouched partitions untouched
+    assert lake_upsert(spark, lake, upd, "doc_id", "lang") == v + 1
+    assert _lang_entries(lake, v + 1, untouched) == before
     # and the update landed
     assert (
-        spark.read.parquet(lake)
+        lake_read(spark, lake)
         .where((F.col("lang") == touched) & (F.col("quality") == 0.999))
         .count()
         == 5
@@ -513,16 +526,28 @@ def test_stream_curate_to_lake_merge_upsert(spark, doc_chunks, tmp_path):
 
 def test_stream_curate_to_lake_upserts_redelivered_keys(spark, tmp_path):
     """A re-crawled doc_id arriving in a later chunk must UPDATE the
-    lake row, not duplicate it — the merge_upsert semantics an append
-    sink cannot give."""
+    lake row, not duplicate it — the upsert semantics an append sink
+    cannot give.  A chunk whose every document falls below
+    ``min_quality`` publishes no version, even as the first batch."""
     import pandas as pd
 
     import pyspec_spark.streaming.corpus as sc
+    from pyspec_spark.lake import lake_history, lake_read
 
     src = tmp_path / "redeliver_src"
     src.mkdir()
     lake = str(tmp_path / "redeliver_lake")
     text = "alpha beta gamma delta epsilon zeta eta theta " * 8
+    # symbol-only short texts score 0.2, under the 0.5 gate below
+    rows0 = pd.DataFrame(
+        {
+            "doc_id": [7, 8],
+            "text": ["!!!! !!!!", "#### ####"],
+            "lang": ["en", "de"],
+            "source": ["crawl_a", "crawl_a"],
+            "n_chars": [9, 9],
+        }
+    )
     rows1 = pd.DataFrame(
         {
             "doc_id": [1, 2],
@@ -542,12 +567,14 @@ def test_stream_curate_to_lake_upserts_redelivered_keys(spark, tmp_path):
             "n_chars": [len(text) + 3, len(text) + 3],
         }
     )
-    rows1.to_parquet(src / "chunk_0.parquet", index=False)
-    rows2.to_parquet(src / "chunk_1.parquet", index=False)
+    rows0.to_parquet(src / "chunk_0.parquet", index=False)
+    rows1.to_parquet(src / "chunk_1.parquet", index=False)
+    rows2.to_parquet(src / "chunk_2.parquet", index=False)
     stream = sc.read_document_stream(spark, str(src), max_files_per_trigger=1)
-    sc.curate_to_lake(stream, spark, lake, min_quality=0.0, compact_every=0)
+    sc.curate_to_lake(stream, spark, lake, min_quality=0.5)
+    assert [h["op"] for h in lake_history(lake)] == ["upsert", "upsert"]
     got = (
-        spark.read.parquet(lake)
+        lake_read(spark, lake)
         .select("doc_id", "source")
         .orderBy("doc_id")
         .collect()
@@ -653,14 +680,13 @@ def test_neardup_stream_cross_batch_state(spark, tmp_path):
 
 def test_curate_to_lake_checkpointed_restart(spark, tmp_path):
     """Restart semantics of the checkpointed lake writer: a re-run with
-    no new data is a NO-OP (no lake file changes), and after a new
+    no new data is a NO-OP (no new lake version), and after a new
     chunk lands only the delta is ingested — incremental ingestion
     stays incremental across restarts."""
-    import glob
-
     import pandas as pd
 
     import pyspec_spark.streaming.corpus as sc
+    from pyspec_spark.lake import lake_read, latest_version
 
     src = tmp_path / "ckpt_src"
     src.mkdir()
@@ -680,32 +706,22 @@ def test_curate_to_lake_checkpointed_restart(spark, tmp_path):
 
     def run():
         stream = sc.read_document_stream(spark, str(src), max_files_per_trigger=1)
-        sc.curate_to_lake(
-            stream, spark, lake, min_quality=0.0, compact_every=0,
-            checkpoint=ckpt,
-        )
-
-    def census():
-        return {
-            f: (os.stat(f).st_mtime_ns, os.stat(f).st_size)
-            for f in glob.glob(os.path.join(lake, "**", "*.parquet"), recursive=True)
-        }
+        sc.curate_to_lake(stream, spark, lake, min_quality=0.0, checkpoint=ckpt)
 
     run()
-    assert {r.doc_id for r in spark.read.parquet(lake).collect()} == {1, 2}
-    before = census()
+    assert {r.doc_id for r in lake_read(spark, lake).collect()} == {1, 2}
+    v = latest_version(lake)
+    fr_before = _lang_entries(lake, v, {"fr"})
 
-    run()  # restart, no new data -> lake must be byte-identical
-    assert census() == before
+    run()  # restart, no new data -> no new version
+    assert latest_version(lake) == v
 
     pd.DataFrame([mk(3, "en")]).to_parquet(src / "c1.parquet", index=False)
     run()  # restart with one new chunk -> only the delta ingested
-    after = census()
-    assert {r.doc_id for r in spark.read.parquet(lake).collect()} == {1, 2, 3}
-    # the fr partition held no updated keys -> its files are untouched
-    fr_before = {f: v for f, v in before.items() if "lang=fr" in f}
-    fr_after = {f: v for f, v in after.items() if "lang=fr" in f}
-    assert fr_before == fr_after
+    assert latest_version(lake) == v + 1
+    assert {r.doc_id for r in lake_read(spark, lake).collect()} == {1, 2, 3}
+    # the fr partition held no updated keys -> its entries carry over
+    assert _lang_entries(lake, v + 1, {"fr"}) == fr_before
 
 
 def test_neardup_stream_out_of_order_ownership_transfer(spark, tmp_path):
